@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..sources import load_table
+from ..sources.tables import fan_out_small_input, input_bytes, load_table
 
 # ---------------------------------------------------------------------------
 # shared text → shingle plumbing (all JVM-side higher-order functions)
@@ -98,25 +98,7 @@ def _partitions_for_bytes(
     return max(default, math.ceil(total_bytes / per_task))
 
 
-def _documents_bytes(sf_dir: str) -> int:
-    """On-disk bytes of the documents parquet (file or directory)."""
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith(("_", "."))
-            )
-    return total
-
-
-def shingle_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
+def shingle_shuffle_partitions(spark: SparkSession, doc_bytes: int) -> int:
     """Partition count for the minhash pipeline's shingle-carrying
     exchanges, scaled with the CORPUS instead of pinned to the session
     conf (VERDICT r8 #8 — the conf docstring's partitions-with-corpus
@@ -126,9 +108,10 @@ def shingle_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     exploded arrays outgrow the heap slice — measured at sf100
     (5 M docs): OOM at 32, clean at byte-scaled counts. On a real
     cluster the same rule lands at thousands of partitions per 100 TB,
-    per-task set constant."""
+    per-task set constant. ``doc_bytes`` is the documents input's size
+    (sources.input_bytes)."""
     default = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return _partitions_for_bytes(_documents_bytes(sf_dir), default)
+    return _partitions_for_bytes(doc_bytes, default)
 
 
 def _docs_with_shingles(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
@@ -142,9 +125,7 @@ def _docs_with_shingles(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     )
 
 
-def shingle_postings(
-    spark: SparkSession, docs: DataFrame, k: int, fan_out: bool = True
-) -> DataFrame:
+def shingle_postings(spark: SparkSession, docs: DataFrame, k: int) -> DataFrame:
     """(doc_id, sh) posting rows — per-doc DISTINCT k-word shingles as an
     Arrow kernel instead of the Catalyst word_shingles array build.
 
@@ -173,11 +154,11 @@ def shingle_postings(
     Jaccard-verification paths keep the ARRAY form (word_shingles) —
     they need whole sets per doc, not postings.
 
-    Scale: the kernel is row-independent; the explicit fan-out exchange
-    exists ONLY while the corpus is small enough that the file scan
-    under-fills the cores (bytes/maxPartitionBytes < defaultParallelism).
-    At 100 TB the scan itself provides the parallelism and NO text ever
-    shuffles — the branch is a no-op by construction."""
+    Scale: the kernel is row-independent and rides ``docs``' partitioning.
+    Batch callers hand it ``fan_out_small_input(docs.select("doc_id",
+    "text"), ...)`` so only those two columns ever cross the exchange; the
+    streaming monitors size their micro-batches themselves and pass the
+    batch as is."""
     import re as _re
 
     import pandas as _pd
@@ -206,34 +187,9 @@ def shingle_postings(
                         shs.append(s)
             yield _pd.DataFrame({"doc_id": ids, "sh": shs})
 
-    par = spark.sparkContext.defaultParallelism
-    max_split = int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
+    return docs.select("doc_id", "text").mapInPandas(
+        rows, "doc_id long, sh string"
     )
-    src = docs.select("doc_id", "text")
-    # fan_out=False: the caller has already sized its input (the
-    # streaming monitors' per-batch n_batch rule) — a second exchange
-    # here would double-shuffle the text
-    if fan_out and _documents_bytes_of(docs) // max_split < par:
-        src = src.repartition(par)
-    return src.mapInPandas(rows, "doc_id long, sh string")
-
-
-def _documents_bytes_of(docs: DataFrame) -> int:
-    """Best-effort input bytes of a documents scan (for the fan-out
-    gate): sum of the scan's file sizes via the plan's file index; falls
-    back to 0 (→ fan out, the small-corpus branch) when unreadable."""
-    try:
-        files = [
-            f
-            for src in docs.inputFiles()
-            for f in [src.replace("file:", "")]
-        ]
-        import os
-
-        return sum(os.path.getsize(f) for f in files if os.path.isfile(f))
-    except Exception:  # noqa: BLE001 - sizing heuristic only
-        return 0
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -499,10 +455,11 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str, tau: float = JACCAR
     # every downstream op is key-local or key-shuffled.
     from pyspark import StorageLevel
 
-    n_part = shingle_shuffle_partitions(spark, sf_dir)
+    doc_bytes = input_bytes(spark, f"{sf_dir}/documents.parquet")
+    n_part = shingle_shuffle_partitions(spark, doc_bytes)
     level = (
         StorageLevel.DISK_ONLY
-        if _documents_bytes(sf_dir) > SHINGLE_MEMORY_CACHE_BYTES
+        if doc_bytes > SHINGLE_MEMORY_CACHE_BYTES
         else StorageLevel.MEMORY_AND_DISK_DESER
     )
     shingled = (
@@ -520,9 +477,7 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str, tau: float = JACCAR
     # The banding stream gets its own FINER sizing: N_BANDS rows per doc
     # and boxed collect_list buffers (BAND_PARTITION_BYTES docstring).
     default = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    n_band = _partitions_for_bytes(
-        _documents_bytes(sf_dir), default, BAND_PARTITION_BYTES
-    )
+    n_band = _partitions_for_bytes(doc_bytes, default, BAND_PARTITION_BYTES)
     candidates = minhash_candidate_pairs(
         with_sigs, num_partitions=None if n_band <= default else n_band
     )
@@ -1162,15 +1117,19 @@ def llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate and always broadcasts; an oversized eval side now degrades to
     a shuffle join instead of an OOM. Graded SFs are all under the gate
     — certified plans byte-identical."""
-    docs = load_table(spark, sf_dir, "documents")
-    eval_docs = docs.filter(F.col("doc_id") % 7 == 0)
-    eval_postings = shingle_postings(spark, eval_docs, SHINGLE_K).select(
+    doc_bytes = input_bytes(spark, f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+
+    def postings(side: DataFrame) -> DataFrame:
+        return shingle_postings(
+            spark, fan_out_small_input(spark, side, doc_bytes), SHINGLE_K
+        )
+
+    eval_postings = postings(docs.filter(F.col("doc_id") % 7 == 0)).select(
         F.col("doc_id").alias("eval_id"), "sh"
     )
-    train_postings = shingle_postings(
-        spark, docs.filter(F.col("doc_id") % 7 != 0), SHINGLE_K
-    )
-    eval_bytes = _documents_bytes(sf_dir) // 7
+    train_postings = postings(docs.filter(F.col("doc_id") % 7 != 0))
+    eval_bytes = doc_bytes // 7
     probe_side = (
         F.broadcast(eval_postings)
         if eval_bytes <= EVAL_BROADCAST_DOC_BYTES
@@ -2473,13 +2432,11 @@ def llm_substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                     shs.append(" ".join(w[i : i + k]))
             yield pd.DataFrame({"doc_id": ids, "pos": poss, "sh": shs})
 
-    par = spark.sparkContext.defaultParallelism
-    src = docs.select("doc_id", "text")
-    max_split = int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
+    src = fan_out_small_input(
+        spark,
+        docs.select("doc_id", "text"),
+        input_bytes(spark, f"{sf_dir}/documents.parquet"),
     )
-    if _documents_bytes(sf_dir) // max_split < par:
-        src = src.repartition(par)
     sh = _truncate_lineage(
         src.mapInPandas(rows, "doc_id long, pos long, sh string").select(
             "doc_id", "pos", F.md5("sh").alias("h")
@@ -2671,13 +2628,11 @@ def llm_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
                     shs.append(" ".join(w[i : i + k]))
             yield pd.DataFrame({"doc_id": ids, "pos": poss, "sh": shs})
 
-    par = spark.sparkContext.defaultParallelism
-    src = docs.select("doc_id", "text")
-    max_split = int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
+    src = fan_out_small_input(
+        spark,
+        docs.select("doc_id", "text"),
+        input_bytes(spark, f"{sf_dir}/documents.parquet"),
     )
-    if _documents_bytes(sf_dir) // max_split < par:
-        src = src.repartition(par)
     sh = src.mapInPandas(rows, "doc_id long, pos long, sh string").select(
         "doc_id",
         "pos",

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..sources import load_table
+from ..sources.tables import fan_out_small_input, input_bytes, load_table
 from .dedup import _truncate_lineage, connected_components
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -965,17 +965,16 @@ def llm_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _pq_adc_topk(spark, emb, sf_dir)
     base = _write_corpus_tiles(spark, emb, sf_dir, n_tiles=1)
     n_bits, n_tables = _lsh_params_for(n_vectors)
-    # Size-gated fan-out of the probe side's INPUT rows (round 13, the
-    # IVF members gate's twin): the corpus side broadcasts, so the
-    # bucket join, the ~1.5M-pair candidate stream, and the distinct's
-    # MAP-SIDE partial dedup all run on the PROBE side's partitioning —
-    # one scan split at bench scale, i.e. single-core. Fanning out the
-    # SOURCE rows (not the emitted keys) keeps each src's (table, probe)
-    # keys co-partitioned, so the ~19% map-side pair dedup the partial
-    # aggregate achieves is preserved. The exchange moves ~550 B/vector
-    # only while the scan under-fills the cores; at 100 TB the branch
-    # is a no-op by construction.
-    probe_src = _ivf_members_fan_out(spark, sf_dir, emb)
+    # Size-gated fan-out of the probe side's INPUT rows: the corpus side
+    # broadcasts, so the bucket join, the ~1.5M-pair candidate stream,
+    # and the distinct's MAP-SIDE partial dedup all run on the PROBE
+    # side's partitioning. Fanning out the SOURCE rows (not the emitted
+    # keys) keeps each src's (table, probe) keys co-partitioned, so the
+    # ~19% map-side pair dedup the partial aggregate achieves is
+    # preserved.
+    probe_src = fan_out_small_input(
+        spark, emb, input_bytes(spark, f"{sf_dir}/embeddings.parquet")
+    )
     candidates = (
         _lsh_keyed(
             probe_src,
@@ -2912,7 +2911,6 @@ def _ivf_assign_cells(
     nn_ints = [int(r["nn"]) for r in seed_rows]
     nn_f = np.array([float(v) for v in nn_ints], dtype=np.float64)
     cell_arr = np.array(cell_ids, dtype=np.int64)
-    n_cells, dim = b_mat.shape
 
     in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     out_schema = ", ".join(
@@ -2920,6 +2918,10 @@ def _ivf_assign_cells(
         + ["cell_id bigint"]
         + ([f"a {in_fields['a']}", "cc bigint"] if keep_vec else [])
     )
+    if not seed_rows:
+        # no seeds (empty corpus): the reference's cross join is empty too
+        return df.sparkSession.createDataFrame([], out_schema)
+    n_cells, dim = b_mat.shape
 
     def _exact_best(row_dots) -> int:
         best_s = None
@@ -2939,25 +2941,36 @@ def _ivf_assign_cells(
             if n == 0:
                 continue
             lengths = acol.value_lengths().to_numpy(zero_copy_only=False)
-            if acol.null_count or not (lengths == dim).all():
+            if (
+                acol.null_count
+                or acol.flatten().null_count
+                or not (lengths == dim).all()
+            ):
                 # defensive only — load_embeddings/_emb_drift_replay_dir
                 # drop null vectors and every fixture is EMBED_DIM-wide.
-                # A null or non-EMBED_DIM vector folds to a null dot in
-                # the Catalyst form (zip_with pads with nulls), so every
-                # score is null and max_by yields NULL — mirrored here.
+                # A null, null-element or non-EMBED_DIM vector folds to a
+                # null dot in the Catalyst form (zip_with pads with
+                # nulls), so every score is null; max_by over
+                # struct(null, -cell_id) is not null-skipping and picks
+                # the SMALLEST cell_id — mirrored here. cc is Σa² when
+                # every element is present, else null (the reference
+                # fold's null propagation).
                 best_cells: list = []
                 cc_vals: list = []
                 for a in acol.to_pylist():
-                    if a is None or len(a) != dim:
-                        best_cells.append(None)
+                    if a is None or None in a:
+                        best_cells.append(cell_ids[0])
                         cc_vals.append(None)
+                        continue
+                    cc_vals.append(sum(x * x for x in a))
+                    if len(a) != dim:
+                        best_cells.append(cell_ids[0])
                         continue
                     dots = [
                         sum(x * y for x, y in zip(a, b_mat[j].tolist()))
                         for j in range(n_cells)
                     ]
                     best_cells.append(cell_ids[_exact_best(dots)])
-                    cc_vals.append(sum(x * x for x in a))
                 cell_out = pa.array(best_cells, type=pa.int64())
                 cc_out = pa.array(cc_vals, type=pa.int64())
             else:
@@ -2999,47 +3012,6 @@ def _ivf_assign_cells(
 
     cols = ["vec_id", "snap", "a"]
     return df.select(*cols).mapInArrow(kernel, out_schema)
-
-
-def _embeddings_bytes(sf_dir: str) -> int:
-    """On-disk bytes of the embeddings parquet (file or directory)."""
-    import os
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith(("_", "."))
-            )
-    return total
-
-
-def _ivf_members_fan_out(
-    spark: SparkSession, sf_dir: str, members: DataFrame
-) -> DataFrame:
-    """Size-gated fan-out for the probe family's members side (the
-    shingle-kernel gate idiom, dedup.py). The round-13 assignment
-    kernel is map-only, so its output rides the SCAN's partitioning —
-    at bench scale the embeddings scan is ONE split, which serialized
-    the downstream candidate join + per-pair dot folds that the
-    round-12 aggregate's exchange used to spread over every core
-    (measured: nprobe probe 1.55 → 2.0 s after the kernel landed,
-    recovered by this gate). The exchange exists ONLY while the scan
-    under-fills the cores (bytes/maxPartitionBytes < defaultParallelism)
-    — at 100 TB the scan itself provides the parallelism and the branch
-    is a no-op by construction."""
-    par = spark.sparkContext.defaultParallelism
-    max_split = int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-    )
-    if _embeddings_bytes(sf_dir) // max_split < par:
-        return members.repartition(par)
-    return members
 
 
 def _int_dot(x: str, y: str) -> Column:
@@ -3269,9 +3241,8 @@ def llm_ivf_cell_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the member norm cc = Σa² now comes off the assignment kernel (one
     # einsum per batch, int64-exact) instead of a per-candidate decimal
     # fold below — computed ONCE per member, never per (query, member).
-    members = _ivf_members_fan_out(
+    members = fan_out_small_input(
         spark,
-        sf_dir,
         _ivf_assign_cells(
             ei.filter(F.col("snap") == 0), seeds, keep_vec=True
         ).select(
@@ -3280,6 +3251,7 @@ def llm_ivf_cell_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a").alias("c"),
             "cc",
         ),
+        input_bytes(spark, f"{sf_dir}/embeddings.parquet"),
     )
     # qq is computed ABOVE the TakeOrdered (round 13, guide §2.3): the
     # r12 projection folded Σa² for EVERY new-half row before the
@@ -3460,9 +3432,8 @@ def _ivf_probe_frame(
     # norm cc rides the assignment kernel — ONCE per member — closing
     # the r12 nprobe regression (the post-join fold ran nprobe× per
     # member; VERDICT r12 #3).
-    members = _ivf_members_fan_out(
+    members = fan_out_small_input(
         spark,
-        sf_dir,
         _ivf_assign_cells(
             ei.filter(F.col("snap") == 0), seeds, keep_vec=True
         ).select(
@@ -3471,6 +3442,7 @@ def _ivf_probe_frame(
             F.col("a").alias("c"),
             "cc",
         ),
+        input_bytes(spark, f"{sf_dir}/embeddings.parquet"),
     )
     # qq above the TakeOrdered — see llm_ivf_cell_probe (round 13)
     queries = (
@@ -3912,12 +3884,12 @@ def llm_ivf_serve_accumulated(
     seeds = _ivf_frozen_seeds(spark, ei)
     # keep_vec: the serve path skips the vec_id re-join (round 12);
     # cc rides the assignment kernel (round 13, see llm_ivf_cell_probe)
-    corpus_assign = _ivf_members_fan_out(
+    corpus_assign = fan_out_small_input(
         spark,
-        sf_dir,
         _ivf_assign_cells(ei, seeds, keep_vec=True).select(
             "vec_id", "snap", "cell_id", "a", "cc"
         ),
+        input_bytes(spark, f"{sf_dir}/embeddings.parquet"),
     )
     return _ivf_serve_topk(ei, seeds, corpus_assign)
 
@@ -4852,15 +4824,15 @@ def llm_ivf_probe_rebalanced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # new_assign carries `a` AND its norm cc (round-13 assignment
     # kernel) — directly servable, no re-join, no per-candidate fold
-    members = _ivf_members_fan_out(
+    members = fan_out_small_input(
         spark,
-        sf_dir,
         new_assign.select(
             F.col("vec_id").alias("nbr_id"),
             "cell_id",
             F.col("a").alias("c"),
             "cc",
         ),
+        input_bytes(spark, f"{sf_dir}/embeddings.parquet"),
     )
     # qq above the TakeOrdered — see llm_ivf_cell_probe (round 13)
     queries = (

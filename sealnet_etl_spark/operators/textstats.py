@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..sources import load_table
+from ..sources.tables import fan_out_small_input, input_bytes, load_table
 from .dedup import JACCARD_TAU, SHINGLE_K, normalized_words, word_shingles
 
 
@@ -1138,7 +1138,12 @@ def llm_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the materialization job costs what it saves).
     from .dedup import shingle_postings
 
-    exploded = shingle_postings(spark, docs, BOILERPLATE_NGRAM).select(
+    src = fan_out_small_input(
+        spark,
+        docs.select("doc_id", "text"),
+        input_bytes(spark, f"{sf_dir}/documents.parquet"),
+    )
+    exploded = shingle_postings(spark, src, BOILERPLATE_NGRAM).select(
         "doc_id", F.col("sh").alias("shingle")
     )
     hot = (

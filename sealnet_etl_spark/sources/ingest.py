@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
-from .tables import load_table
+from .tables import input_bytes, load_table
 
 #: Scratch area for sink round-trips (inside the repo; per-SF subdirs).
 SCRATCH_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
@@ -204,15 +204,11 @@ def src_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one repartition shuffle sized by data volume (not a
     `coalesce(1)` driver bottleneck — coalesce would serialize the write
     through few tasks and skip the size-aware split)."""
-    import glob
-    import os as _os
-
     frag_path = _scratch(sf_dir, "documents_fragmented")
     compact_path = _scratch(sf_dir, "documents_compacted")
     docs = load_table(spark, sf_dir, "documents")
     docs.repartition(64).write.mode("overwrite").parquet(frag_path)
-    frag_files = glob.glob(f"{frag_path}/part-*.parquet")
-    total_bytes = sum(_os.path.getsize(f) for f in frag_files)
+    total_bytes = input_bytes(spark, frag_path)
     n_target = max(1, -(-total_bytes // COMPACT_TARGET_BYTES))
     (
         spark.read.parquet(frag_path)

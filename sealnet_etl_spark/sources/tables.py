@@ -53,6 +53,55 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def input_bytes(spark: SparkSession, path: str) -> int:
+    """Bytes a file scan of ``path`` reads, sized through the Hadoop
+    FileSystem that owns the path, so a ``file://``, ``hdfs://`` or
+    ``s3a://`` URI sizes exactly like a plain local path. A file gives its
+    length; a directory the recursive sum of its data files, skipping what
+    Spark's file index skips (names starting with ``_`` or ``.``:
+    ``_SUCCESS``, ``.crc`` checksums, ``_temporary``); a missing path 0."""
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(root):
+        return 0
+    total = 0
+    pending = [fs.getFileStatus(root)]
+    while pending:
+        status = pending.pop()
+        if not status.isDirectory():
+            total += status.getLen()
+            continue
+        pending.extend(
+            child
+            for child in fs.listStatus(status.getPath())
+            if not child.getPath().getName().startswith(("_", "."))
+        )
+    return total
+
+
+def fan_out_small_input(
+    spark: SparkSession, df: DataFrame, nbytes: int
+) -> DataFrame:
+    """``df.repartition(defaultParallelism)`` iff an input of ``nbytes``
+    scans into fewer splits than there are cores, else ``df`` unchanged.
+
+    For kernel-fed stages (Arrow/pandas kernels, row-local assignment
+    kernels, broadcast-probe sides) whose output rides the scan's
+    partitioning: at bench scale a fixture is one split, which would put
+    the whole stage on one core. The exchange exists only while the scan
+    under-fills the cores (nbytes // maxPartitionBytes < defaultParallelism);
+    at 100 TB the scan itself provides the parallelism and the gate is a
+    no-op by construction. ``maxPartitionBytes`` is read through Spark's
+    typed SQLConf accessor, so unit strings such as ``"128m"`` parse the
+    way the file scan parses them."""
+    par = spark.sparkContext.defaultParallelism
+    max_split = (
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
+    return df.repartition(par) if nbytes // max_split < par else df
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 

@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..sources.tables import load_table
+from ..sources.tables import fan_out_small_input, input_bytes, load_table
 from .replay import run_available_now, write_replay_chunks
 
 EMBED_DIM = 64
@@ -300,10 +300,10 @@ def str_streaming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-GB partitions; the verify join likewise inherits the session
     # default for both shingle-carrying sides. n_batch sizes the batch's
     # own stages (bytes/chunks), n_full the accumulated-prior join side.
-    from ..operators.dedup import _documents_bytes, _partitions_for_bytes
+    from ..operators.dedup import _partitions_for_bytes
 
     _default = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    _doc_bytes = _documents_bytes(sf_dir)
+    _doc_bytes = input_bytes(spark, f"{sf_dir}/documents.parquet")
     n_batch = _partitions_for_bytes(
         -(-_doc_bytes // N_DOC_CHUNKS), _default
     )
@@ -595,16 +595,18 @@ def str_contamination_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # benchmark suite is a fixed artifact a deployment refreshes only
     # when it changes; every later monitor invocation (bench reruns,
     # repeated triggers across restarts) reads it back
+    doc_bytes = input_bytes(spark, f"{sf_dir}/documents.parquet")
     memo_key = _eval_postings_key(sf_dir)
     if _EVAL_POSTINGS_WRITTEN.get(eval_store) != memo_key:
         with _EVAL_POSTINGS_LOCK:  # double-check: first writer wins
             if _EVAL_POSTINGS_WRITTEN.get(eval_store) != memo_key:
                 shutil.rmtree(eval_store, ignore_errors=True)
-                docs = load_table(spark, sf_dir, "documents")
+                docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+                eval_docs = docs.filter(F.col("doc_id") % 7 == 0)
                 ev = (
                     shingle_postings(
                         spark,
-                        docs.filter(F.col("doc_id") % 7 == 0),
+                        fan_out_small_input(spark, eval_docs, doc_bytes),
                         SHINGLE_K,
                     )
                     .select(F.col("sh").alias("s"))
@@ -619,12 +621,10 @@ def str_contamination_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 2-3 scan-split tasks and the localCheckpoint holds multi-GB
     # shingle partitions. Identity at graded/bench scale (gate keeps the
     # certified plan byte-for-byte).
-    from ..operators.dedup import _documents_bytes, _partitions_for_bytes
+    from ..operators.dedup import _partitions_for_bytes
 
     _default = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    n_batch = _partitions_for_bytes(
-        -(-_documents_bytes(sf_dir) // N_DOC_CHUNKS), _default
-    )
+    n_batch = _partitions_for_bytes(-(-doc_bytes // N_DOC_CHUNKS), _default)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sized = (
@@ -639,9 +639,9 @@ def str_contamination_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         # denominators need only membership (size(words) >= K), a narrow
         # filter — so the localCheckpoint that existed to share the
         # array column between the two consumers is gone too
-        postings = shingle_postings(
-            spark, train, SHINGLE_K, fan_out=False
-        ).select("doc_id", F.col("sh").alias("s"))
+        postings = shingle_postings(spark, train, SHINGLE_K).select(
+            "doc_id", F.col("sh").alias("s")
+        )
         members = train.filter(
             F.size(normalized_words(F.col("text"))) >= SHINGLE_K
         ).select("doc_id", "source")
@@ -918,16 +918,18 @@ def str_contamination_monitor_fixed(
     for p in (results_store, checkpoint):
         shutil.rmtree(p, ignore_errors=True)
 
+    doc_bytes = input_bytes(spark, f"{sf_dir}/documents.parquet")
     memo_key = _eval_postings_key(sf_dir)
     if _EVAL_POSTINGS_WRITTEN.get(eval_store) != memo_key:
         with _EVAL_POSTINGS_LOCK:  # double-check: first writer wins
             if _EVAL_POSTINGS_WRITTEN.get(eval_store) != memo_key:
                 shutil.rmtree(eval_store, ignore_errors=True)
-                docs = load_table(spark, sf_dir, "documents")
+                docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+                eval_docs = docs.filter(F.col("doc_id") < EVAL_PROBE_N)
                 ev = (
                     shingle_postings(
                         spark,
-                        docs.filter(F.col("doc_id") < EVAL_PROBE_N),
+                        fan_out_small_input(spark, eval_docs, doc_bytes),
                         SHINGLE_K,
                     )
                     .select(F.col("sh").alias("s"))
@@ -940,12 +942,10 @@ def str_contamination_monitor_fixed(
     # coalesced replay file → 2-3 scan splits → multi-GB shingle
     # partitions in the localCheckpoint at the sf100 decade); identity
     # at graded/bench scale
-    from ..operators.dedup import _documents_bytes, _partitions_for_bytes
+    from ..operators.dedup import _partitions_for_bytes
 
     _default = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    n_batch = _partitions_for_bytes(
-        -(-_documents_bytes(sf_dir) // N_DOC_CHUNKS), _default
-    )
+    n_batch = _partitions_for_bytes(-(-doc_bytes // N_DOC_CHUNKS), _default)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sized = (
@@ -956,9 +956,9 @@ def str_contamination_monitor_fixed(
         train = sized.filter(F.col("doc_id") >= EVAL_PROBE_N)
         # the registered monitor's kernel-postings + narrow-membership
         # shape (see its process body)
-        postings = shingle_postings(
-            spark, train, SHINGLE_K, fan_out=False
-        ).select("doc_id", F.col("sh").alias("s"))
+        postings = shingle_postings(spark, train, SHINGLE_K).select(
+            "doc_id", F.col("sh").alias("s")
+        )
         members = train.filter(
             F.size(normalized_words(F.col("text"))) >= SHINGLE_K
         ).select("doc_id", "source")

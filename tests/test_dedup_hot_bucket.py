@@ -19,6 +19,8 @@ from sealnet_etl_spark.operators.dedup import (
     simhash_candidate_pairs,
 )
 
+from .conftest import SF_DIR
+
 N_DOCS = 1000
 
 
@@ -224,8 +226,9 @@ def test_shingle_shuffle_partitions_small_corpus_keeps_default(spark):
     so the helper returns the session default and the physical plan is
     byte-identical to the pre-sizing one."""
     from sealnet_etl_spark.operators.dedup import shingle_shuffle_partitions
+    from sealnet_etl_spark.sources.tables import input_bytes
 
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert (
-        shingle_shuffle_partitions(spark, "/root/testdata/sf0.01") == default
-    )
+    doc_bytes = input_bytes(spark, f"{SF_DIR}/documents.parquet")
+    assert doc_bytes > 0
+    assert shingle_shuffle_partitions(spark, doc_bytes) == default

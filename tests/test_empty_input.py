@@ -12,7 +12,68 @@ from __future__ import annotations
 
 import pytest
 
+from sealnet_etl_spark.catalog import _REGRADE_FIRST
 from sealnet_etl_spark.registry import all_queries
+
+#: Default-tier sweep set: the queries whose plans changed last
+#: (_REGRADE_FIRST) plus every query that reaches the input sizer or the
+#: fan-out gate (sources.input_bytes / sources.fan_out_small_input).
+SWEPT: tuple[str, ...] = tuple(
+    sorted(
+        set(_REGRADE_FIRST)
+        | {
+            "llm_boilerplate_ngrams",
+            "llm_contamination_report",
+            "llm_cross_source_dup_matrix",
+            "llm_cross_source_overlap",
+            "llm_decontaminate",
+            "llm_dedup_audit_report",
+            "llm_dedup_cluster_size_histogram",
+            "llm_dedup_clusters",
+            "llm_dedup_degree_report",
+            "llm_dedup_threshold_sweep",
+            "llm_effective_tokens",
+            "llm_ivf_cell_probe",
+            "llm_ivf_cell_probe_nprobe",
+            "llm_ivf_probe_rebalanced",
+            "llm_ivf_serve_accumulated",
+            "llm_leakage_free_split",
+            "llm_lsh_ann_topk",
+            "llm_minhash_near_dup_pairs",
+            "llm_pagerank",
+            "llm_quality_dedup_crosstab",
+            "llm_substring_dedup_apply",
+            "llm_substring_dedup_spans",
+            "llm_triangle_count",
+            "llm_winnowing_fingerprints",
+            "src_compact_small_files",
+            "str_contamination_monitor",
+            "str_contamination_monitor_fixed",
+            "str_streaming_near_dup",
+        }
+    )
+)
+
+#: The swept set runs in the default tier; every registered query only in
+#: the exhaustive tier.
+_SWEEPS = [
+    pytest.param(SWEPT, id="swept"),
+    pytest.param(None, id="all", marks=pytest.mark.full),
+]
+
+
+def _failures(spark, sf_dir: str, names) -> dict[str, str]:
+    # collect(), not count(): count() lets Catalyst prune computed columns
+    # whose evaluation can throw under ANSI mode (element_at past the end,
+    # divide-by-zero), silently weakening the no-crash invariant.
+    queries = all_queries()
+    failures = {}
+    for name in names or queries:
+        try:
+            assert len(queries[name](spark, sf_dir).collect()) >= 0
+        except Exception as exc:  # noqa: BLE001 - collecting the sweep
+            failures[name] = f"{type(exc).__name__}: {exc}"[:160]
+    return failures
 
 
 @pytest.fixture(scope="module")
@@ -29,17 +90,9 @@ def empty_sf_dir(spark, tmp_path_factory):
     return str(base)
 
 
-@pytest.mark.full  # all-query sweep: exhaustive tier (VERDICT r12 #2)
-def test_every_query_survives_empty_tables(spark, empty_sf_dir):
-    # collect(), not count(): count() lets Catalyst prune computed columns
-    # whose evaluation can throw under ANSI mode (element_at past the end,
-    # divide-by-zero), silently weakening the no-crash invariant.
-    failures = {}
-    for name, fn in all_queries().items():
-        try:
-            assert len(fn(spark, empty_sf_dir).collect()) >= 0
-        except Exception as exc:  # noqa: BLE001 - collecting the sweep
-            failures[name] = f"{type(exc).__name__}: {exc}"[:160]
+@pytest.mark.parametrize("names", _SWEEPS)
+def test_every_query_survives_empty_tables(spark, empty_sf_dir, names):
+    failures = _failures(spark, empty_sf_dir, names)
     assert not failures, failures
 
 
@@ -73,17 +126,12 @@ def nulled_sf_dir(spark, tmp_path_factory):
     return str(base)
 
 
-@pytest.mark.full  # all-query sweep: exhaustive tier (VERDICT r12 #2)
-def test_every_query_survives_null_payloads(spark, nulled_sf_dir):
+@pytest.mark.parametrize("names", _SWEEPS)
+def test_every_query_survives_null_payloads(spark, nulled_sf_dir, names):
     """No operator may crash on null text/embedding/value cells: JVM-side
     expressions are null-safe by construction, and every Python kernel
     must drop or bucket null payloads (similarity kernels drop null
     vectors — llm_embedding_qa is the operator that REPORTS them; the
     compression kernel buckets null text with empty text)."""
-    failures = {}
-    for name, fn in all_queries().items():
-        try:
-            assert len(fn(spark, nulled_sf_dir).collect()) >= 0
-        except Exception as exc:  # noqa: BLE001 - collecting the sweep
-            failures[name] = f"{type(exc).__name__}: {exc}"[:160]
+    failures = _failures(spark, nulled_sf_dir, names)
     assert not failures, failures

@@ -53,7 +53,7 @@ def test_shingle_kernel_unicode_whitespace_parity(spark):
     ]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
     kernel = set(
-        map(tuple, shingle_postings(spark, docs, k, fan_out=False).collect())
+        map(tuple, shingle_postings(spark, docs, k).collect())
     )
     catalyst = set(
         map(

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from sealnet_etl_spark.registry import all_queries
 
-SF = "/root/testdata/sf0.01"
+from .conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -35,15 +35,24 @@ def test_ivf_assign_kernel_matches_catalyst(spark):
         _ivf_int_vectors,
     )
 
-    ei = _ivf_int_vectors(spark, SF)
+    ei = _ivf_int_vectors(spark, SF_DIR)
     seeds = _ivf_frozen_seeds(spark, ei)
-    for keep_vec in (False, True):
-        new = _ivf_assign_cells(ei, seeds, keep_vec=keep_vec)
-        old = _ivf_assign_cells_catalyst(ei, seeds, keep_vec=keep_vec)
-        if keep_vec:
-            new = new.select("vec_id", "snap", "cell_id", "a")
-        assert new.exceptAll(old).count() == 0, keep_vec
-        assert old.exceptAll(new).count() == 0, keep_vec
+    # edge input: a null vector, a null element and a wrong-width vector
+    # fold to a null dot for every cell in the Catalyst form, whose
+    # max_by then picks the smallest cell_id; the kernel's fallback
+    # must do the same
+    edge = spark.createDataFrame(
+        [(-1, 0, None), (-2, 0, [1, None] * 32), (-3, 1, [5, -2, 9])],
+        ei.schema,
+    )
+    for df in (ei, edge):
+        for keep_vec in (False, True):
+            new = _ivf_assign_cells(df, seeds, keep_vec=keep_vec)
+            old = _ivf_assign_cells_catalyst(df, seeds, keep_vec=keep_vec)
+            if keep_vec:
+                new = new.select("vec_id", "snap", "cell_id", "a")
+            assert new.exceptAll(old).count() == 0, keep_vec
+            assert old.exceptAll(new).count() == 0, keep_vec
 
 
 def test_ivf_assign_kernel_cc_is_exact_sq_norm(spark):
@@ -55,7 +64,7 @@ def test_ivf_assign_kernel_cc_is_exact_sq_norm(spark):
         _ivf_int_vectors,
     )
 
-    ei = _ivf_int_vectors(spark, SF)
+    ei = _ivf_int_vectors(spark, SF_DIR)
     seeds = _ivf_frozen_seeds(spark, ei)
     got = _ivf_assign_cells(ei, seeds, keep_vec=True).select("vec_id", "cc")
     ref = ei.select(
@@ -110,7 +119,7 @@ def test_ivf_probe_nprobe_unchanged_by_round13(spark, queries):
     kernel."""
     from sealnet_etl_spark.oracle import compare_query
 
-    report = compare_query(spark, "llm_ivf_cell_probe_nprobe", SF)
+    report = compare_query(spark, "llm_ivf_cell_probe_nprobe", SF_DIR)
     assert report["match"], report
 
 
@@ -124,7 +133,7 @@ def test_int_dot_fold_matches_decimal_fold(spark):
         _ivf_int_vectors,
     )
 
-    ei = _ivf_int_vectors(spark, SF).select(
+    ei = _ivf_int_vectors(spark, SF_DIR).select(
         "vec_id", "a", F.reverse("a").alias("b")
     )
     got = ei.select(
