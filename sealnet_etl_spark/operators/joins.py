@@ -19,6 +19,7 @@ from pyspark.sql.window import Window
 
 from ..registry import query
 from ..sources import load_table
+from ..sources.store import remove, warehouse
 from .trainprep import md5_bucket
 
 
@@ -563,8 +564,6 @@ def jn_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     Table names carry an sf-dir fingerprint so scale factors never read
     each other's buckets; re-runs overwrite idempotently."""
     import hashlib
-    import re
-    import shutil
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     orders_t, lineitem_t = f"orders_bkt_{tag}", f"lineitem_bkt_{tag}"
@@ -576,12 +575,9 @@ def jn_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         # a prior session's managed-table files may survive while the
         # in-memory catalog is fresh — clear the stale locations first
-        warehouse = re.sub(
-            "^file:(//)?", "", spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        )
         for t in (orders_t, lineitem_t):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
+            remove(spark, f"{warehouse(spark)}/{t}")
         (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_orderpriority")

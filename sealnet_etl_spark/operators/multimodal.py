@@ -15,7 +15,6 @@ executor core handles a bounded byte volume per task.
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Iterator
 
 import pandas as pd
@@ -25,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
+from ..sources.store import store_path, write_once
 
 
 def decode_image(content: bytes) -> object:
@@ -712,30 +712,6 @@ def llm_multimodal_pair_align(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on the multimodal near-dup — VERDICT r9 #7)
 # ---------------------------------------------------------------------------
 
-#: process-scoped memo for the persisted perceptual-hash index
-#: ({store path: corpus key} — track what the path CURRENTLY holds so a
-#: corpus switch or regenerated fixture forces a rebuild; the
-#: _EVAL_POSTINGS_WRITTEN discipline). Lock: the token_counts
-#: check-then-write race class — first writer wins, racers wait.
-_PHASH_INDEX_WRITTEN: dict = {}
-_PHASH_INDEX_LOCK = threading.Lock()
-
-
-def _mm_corpus_key(sf_dir: str) -> tuple:
-    """Identity of the binary corpus an index was built from: the
-    directory's absolute path plus the newest mtime among its parquet
-    blobs (any rewrite rolls the key)."""
-    import glob
-    import os
-
-    base = os.path.abspath(sf_dir)
-    mts = [
-        os.stat(p).st_mtime_ns
-        for p in glob.glob(os.path.join(base, "*.parquet"))
-    ]
-    return (base, max(mts) if mts else -1)
-
-
 @query(
     "llm_multimodal_incremental_near_dup",
     survey_id="LLM-10/LLM-2",
@@ -779,30 +755,17 @@ def llm_multimodal_incremental_near_dup(
     4×16-bit chunk scheme — LOSSLESS at Hamming ≤ 3 by pigeonhole, so
     the blocked probe hash-matches the brute-force a×b oracle with no
     recall caveat."""
-    import os
-    import re
-
     files = spark.read.format("binaryFile").load(f"{sf_dir}/*.parquet")
     sigs = files.select("path", "content").mapInPandas(
         phash_signatures, PHASH_SCHEMA
     )
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    warehouse = re.sub("^file:(//)?", "", warehouse)
-    store = os.path.join(
-        warehouse,
-        "_phash_index",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.normpath(sf_dir)) or "sf",
+    store = write_once(
+        store_path(spark, "phash_index", sf_dir),
+        lambda path: sigs.filter(F.col("tag") == "a")
+        .select("file_name", "sig_lo", "sig_hi")
+        .write.mode("overwrite")
+        .parquet(path),
     )
-    corpus_key = _mm_corpus_key(sf_dir)
-    if _PHASH_INDEX_WRITTEN.get(store) != corpus_key:
-        with _PHASH_INDEX_LOCK:  # double-check: first writer wins
-            if _PHASH_INDEX_WRITTEN.get(store) != corpus_key:
-                sigs.filter(F.col("tag") == "a").select(
-                    "file_name", "sig_lo", "sig_hi"
-                ).write.mode("overwrite").parquet(store)
-                _PHASH_INDEX_WRITTEN[store] = corpus_key
 
     chunk_vals = F.array(
         *[

@@ -25,13 +25,13 @@ cells) complements LSH (no training pass needed).
 from __future__ import annotations
 
 import random
-import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
+from ..sources.store import store_path, write_once
 from ..sources.tables import fan_out_small_input, input_bytes, load_table
 from .dedup import _truncate_lineage, connected_components
 
@@ -202,38 +202,6 @@ def _load_tile(path: str, with_labels: bool = False):
     return out
 
 
-#: driver-side write-once memo for _write_corpus_tiles (paths are
-#: app-scoped, so entries die with the session). The module lock
-#: serializes first writers across every store memo in this module
-#: (tiles, IVF index) — the token_counts check-then-write race class
-#: (round-9 review finding): two threads that both miss a memo would
-#: run overlapping mode("overwrite") writes to the same path.
-_TILES_WRITTEN: set = set()
-_STORE_WRITE_LOCK = threading.Lock()
-
-
-def _sf_tag(sf_dir: str) -> str:
-    """Session-stable identity of ``sf_dir``'s embeddings for the tile/
-    codes memo paths: leaf name plus a hash of (absolute path, source
-    mtime). The leaf name alone (pre-round-8-review form) collided two
-    different corpora whose directories share a basename and kept
-    serving a fixture regenerated mid-session — the write-once memo
-    would skip the write and every later consumer scored against the
-    FIRST corpus's vectors with no error. The mtime of the embeddings
-    parquet (file or directory — Spark rewrites recreate the entry)
-    rolls the tag on regeneration."""
-    import hashlib
-    import os
-
-    p = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    try:
-        mt = str(os.stat(p).st_mtime_ns)
-    except OSError:
-        mt = "missing"
-    leaf = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return leaf + "_" + hashlib.md5((p + "|" + mt).encode()).hexdigest()[:8]
-
-
 def _write_corpus_tiles(
     spark: SparkSession,
     corpus_df: DataFrame,
@@ -242,48 +210,32 @@ def _write_corpus_tiles(
     extra_cols: tuple = (),
 ) -> str:
     """Write the corpus as ``tile=<vec_id mod n_tiles>`` parquet partitions
-    under the Spark warehouse dir (shared storage on a real cluster) and
-    return the base path. The path is keyed by ``spark.app.id`` so
-    CONCURRENT sessions never collide on tiles (round-3 judge #4: two
-    simultaneous test runs used to race on the shared path); within one
-    session the path is deterministic per (sf, n_tiles, extra_cols) →
-    idempotent overwrite, no unbounded growth. The per-app directory is
-    scratch space: on a real cluster it lands in the job's scratch
-    prefix and is reaped with the application. The driver never holds
-    vector data. ``extra_cols`` (e.g. label) ride along for label-aware
-    scoring — a schema-distinct tile gets its own directory.
+    to a ``sim_tiles`` store (shared storage on a real cluster) and return
+    its path. The store path is keyed by app id and corpus (concurrent
+    sessions never collide; a regenerated corpus gets new tiles) and by
+    (n_tiles, extra_cols), so it fully determines the content and the
+    write runs once per session: at the sf10 decade a rewrite
+    re-materializes 200 k vectors, tens of seconds per tile consumer.
+    The driver never holds vector data. ``extra_cols`` (e.g. label) ride
+    along for label-aware scoring — a schema-distinct tile gets its own
+    store.
     """
-    import os
-    import re
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    warehouse = re.sub("^file:(//)?", "", warehouse)
-    app_id = spark.sparkContext.applicationId
-    tag = _sf_tag(sf_dir)
-    suffix = ("_" + "_".join(extra_cols)) if extra_cols else ""
-    base = os.path.join(
-        warehouse, "_sim_tiles", app_id, f"{tag}_t{n_tiles}{suffix}"
+    return write_once(
+        store_path(
+            spark,
+            "sim_tiles",
+            f"{sf_dir}/embeddings.parquet",
+            f"t{n_tiles}",
+            *extra_cols,
+        ),
+        lambda base: (
+            corpus_df.select("vec_id", "embedding", *extra_cols)
+            .withColumn("tile", F.pmod(F.col("vec_id"), F.lit(n_tiles)))
+            .write.mode("overwrite")
+            .partitionBy("tile")
+            .parquet(base)
+        ),
     )
-    # write-once per session (r8): the path fully determines the content
-    # within one app (same sf_dir parquet + params → same rows), but the
-    # overwrite itself is NOT free — at the sf10 decade it re-materializes
-    # 200 k vectors (~tens of seconds) on EVERY call of every tile
-    # consumer. Memoizing the write makes "one write + load per session"
-    # true in code, not just in the docstring.
-    if base not in _TILES_WRITTEN:
-        with _STORE_WRITE_LOCK:  # double-check: first writer wins
-            if base not in _TILES_WRITTEN:
-                (
-                    corpus_df.select("vec_id", "embedding", *extra_cols)
-                    .withColumn(
-                        "tile", F.pmod(F.col("vec_id"), F.lit(n_tiles))
-                    )
-                    .write.mode("overwrite")
-                    .partitionBy("tile")
-                    .parquet(base)
-                )
-                _TILES_WRITTEN.add(base)
-    return base
 
 
 def _tile_topk(queries_df: DataFrame, tile_path: str) -> DataFrame:
@@ -736,10 +688,6 @@ def _encode_mat(mat_hat, books):
     return codes
 
 
-#: driver-side write-once memo for _write_pq_codes (app-scoped paths).
-_CODES_WRITTEN: set = set()
-
-
 def _write_pq_codes(spark: SparkSession, df: DataFrame, books, path: str) -> None:
     """PQ-encode ``df``'s embeddings into a (vec_id, codes) parquet table
     with ONE distributed Spark job — each row encoded exactly once across
@@ -747,36 +695,39 @@ def _write_pq_codes(spark: SparkSession, df: DataFrame, books, path: str) -> Non
     whole corpus slice at kernel init (r8 review: the in-kernel form did
     32× the work on a 32-core box and was memory-bandwidth-bound; at a
     real cluster's worker count it would be strictly worse). Write-once
-    per session: the app-scoped path determines the content."""
+    per session: ``path`` derives from a tile store path, which
+    determines the content."""
     import numpy as np
     import pandas as pd
 
-    if path in _CODES_WRITTEN:
-        return
-    bc = spark.sparkContext.broadcast(books)
+    def build(path: str) -> None:
+        bc = spark.sparkContext.broadcast(books)
 
-    def encode(batches):
-        bk = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame({"vec_id": [], "codes": []}).astype(
-                    {"vec_id": "int64", "codes": "object"}
+        def encode(batches):
+            bk = bc.value
+            for pdf in batches:
+                if not len(pdf):
+                    yield pd.DataFrame({"vec_id": [], "codes": []}).astype(
+                        {"vec_id": "int64", "codes": "object"}
+                    )
+                    continue
+                v = np.array(list(pdf["embedding"]), dtype=np.float64)
+                n = np.sqrt((v * v).sum(axis=1, keepdims=True))
+                n[n == 0.0] = 1.0
+                codes = _encode_mat(v / n, bk)
+                yield pd.DataFrame(
+                    {"vec_id": pdf["vec_id"], "codes": list(codes)}
                 )
-                continue
-            v = np.array(list(pdf["embedding"]), dtype=np.float64)
-            n = np.sqrt((v * v).sum(axis=1, keepdims=True))
-            n[n == 0.0] = 1.0
-            codes = _encode_mat(v / n, bk)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "codes": list(codes)})
 
-    (
-        df.select("vec_id", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(encode, "vec_id bigint, codes array<bigint>")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    _CODES_WRITTEN.add(path)
+        (
+            df.select("vec_id", "embedding")
+            .repartition(spark.sparkContext.defaultParallelism)
+            .mapInPandas(encode, "vec_id bigint, codes array<bigint>")
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+
+    write_once(path, build)
 
 
 def _pq_adc_topk(spark: SparkSession, emb: DataFrame, sf_dir: str) -> DataFrame:
@@ -2704,12 +2655,6 @@ def _margin_mine(
 #: either way).
 IVF_REFRESH_CELLS = 16
 
-#: process-scoped memo for the persisted cell-assignment index
-#: ({store path: corpus key} — the _EVAL_POSTINGS_WRITTEN discipline:
-#: track what the path CURRENTLY holds, so a corpus switch or fixture
-#: regeneration forces a rebuild instead of probing a stale index).
-_IVF_INDEX_WRITTEN: dict = {}
-
 _IVF_REFRESH_ORACLE = f"""
     WITH ei AS (
         SELECT vec_id, vec_id % 2 AS snap,
@@ -3077,35 +3022,21 @@ def llm_ivf_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     half.
 
     Incremental mechanics: the old half's assignments are written ONCE
-    per (process, corpus) to an app-scoped warehouse store (_sf_tag
-    memo discipline) — the persisted index; each refresh assigns ONLY
+    per (process, corpus) to an ``ivf_index`` store (sources/store.py)
+    — the persisted index; each refresh assigns ONLY
     the batch (O(batch·|cells|) work) and merges with the stored
     per-cell counts. At 100 TB the store is 16 bytes/vector, the seed
     side broadcasts at any corpus size, and nothing re-touches old
     vectors — the same never-re-shingle contract as the streaming
     near-dup store."""
-    import os
-    import re
-
     ei = _ivf_int_vectors(spark, sf_dir)
     seeds = _ivf_frozen_seeds(spark, ei)
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    warehouse = re.sub("^file:(//)?", "", warehouse)
-    store = os.path.join(
-        warehouse,
-        "_ivf_index",
-        spark.sparkContext.applicationId,
-        _sf_tag(sf_dir),
+    store = write_once(
+        store_path(spark, "ivf_index", f"{sf_dir}/embeddings.parquet"),
+        lambda path: _ivf_assign_cells(
+            ei.filter(F.col("snap") == 0), seeds
+        ).write.mode("overwrite").parquet(path),
     )
-    corpus_key = _sf_tag(sf_dir)
-    if _IVF_INDEX_WRITTEN.get(store) != corpus_key:
-        with _STORE_WRITE_LOCK:  # double-check: first writer wins
-            if _IVF_INDEX_WRITTEN.get(store) != corpus_key:
-                _ivf_assign_cells(
-                    ei.filter(F.col("snap") == 0), seeds
-                ).write.mode("overwrite").parquet(store)
-                _IVF_INDEX_WRITTEN[store] = corpus_key
 
     old_counts = (
         spark.read.parquet(store)

@@ -9,13 +9,12 @@ corpus-level statistics (doc frequencies, histograms) shuffle only
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
+from ..sources.store import store_path, write_once
 from ..sources.tables import fan_out_small_input, input_bytes, load_table
 from .dedup import JACCARD_TAU, SHINGLE_K, normalized_words, word_shingles
 
@@ -502,18 +501,6 @@ def llm_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol.
 TOKEN_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
-#: driver-side write-once memo for token_counts (paths are app-scoped,
-#: so entries die with the session — the _TILES_WRITTEN precedent,
-#: similarity.py). The lock serializes first writers: the memo is
-#: check-then-write, and two threads that both miss the set would run
-#: overlapping mode("overwrite") writes to the same parquet path,
-#: corrupting the frame eight registered queries read (round-9 review
-#: finding — the known scratch-race class). App-scoped paths already
-#: isolate processes; the lock closes the in-process window.
-_TOKEN_COUNTS_WRITTEN: set = set()
-_TOKEN_COUNTS_LOCK = threading.Lock()
-
-
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE session-scoped materialized token-count frame: one row per
     document with (doc_id, source, lang, n_chars, n_words, n_tokens),
@@ -531,48 +518,29 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     length), so every downstream result is bit-identical to the
     pre-memo plans.
 
-    Same layout discipline as similarity.py's _write_corpus_tiles: the
-    path is keyed by spark.app.id (concurrent sessions never collide)
-    plus a (path, mtime) corpus tag (a fixture regenerated mid-session
-    rolls the tag instead of serving stale counts)."""
-    import hashlib
-    import os
-    import re
+    The frame is a ``token_counts`` store (sources/store.py): keyed by
+    app id (concurrent sessions never collide) and corpus (a fixture
+    regenerated mid-session gets new counts instead of stale ones)."""
 
-    p = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    try:
-        mt = str(os.stat(p).st_mtime_ns)
-    except OSError:
-        mt = "missing"
-    leaf = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    tag = leaf + "_" + hashlib.md5((p + "|" + mt).encode()).hexdigest()[:8]
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    warehouse = re.sub("^file:(//)?", "", warehouse)
-    base = os.path.join(
-        warehouse, "_token_counts", spark.sparkContext.applicationId, tag
+    def build(path: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        docs.select(
+            "doc_id",
+            "source",
+            "lang",
+            F.length("text").alias("n_chars"),
+            F.size(normalized_words(F.col("text"))).alias("n_words"),
+            F.regexp_count(F.lower("text"), F.lit(TOKEN_PATTERN)).alias(
+                "n_tokens"
+            ),
+        ).write.mode("overwrite").parquet(path)
+
+    return spark.read.parquet(
+        write_once(
+            store_path(spark, "token_counts", f"{sf_dir}/documents.parquet"),
+            build,
+        )
     )
-    if base not in _TOKEN_COUNTS_WRITTEN:
-        with _TOKEN_COUNTS_LOCK:  # double-check: first writer wins,
-            if base not in _TOKEN_COUNTS_WRITTEN:  # racers wait then read
-                docs = load_table(spark, sf_dir, "documents")
-                (
-                    docs.select(
-                        "doc_id",
-                        "source",
-                        "lang",
-                        F.length("text").alias("n_chars"),
-                        F.size(normalized_words(F.col("text"))).alias(
-                            "n_words"
-                        ),
-                        F.regexp_count(
-                            F.lower("text"), F.lit(TOKEN_PATTERN)
-                        ).alias("n_tokens"),
-                    )
-                    .write.mode("overwrite")
-                    .parquet(base)
-                )
-                _TOKEN_COUNTS_WRITTEN.add(base)
-    return spark.read.parquet(base)
 
 
 @query(

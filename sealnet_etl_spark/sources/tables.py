@@ -53,31 +53,52 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+#: (py4j gateway, its ``org.apache.hadoop.fs.Path`` class): py4j resolves
+#: a dotted JVM name one package at a time, a round trip each.
+_PATH_CLASS: tuple = (None, None)
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path``: the Hadoop FileSystem that owns
+    it, so a ``file://``, ``hdfs://`` or ``s3a://`` URI behaves exactly
+    like a plain local path. The Hadoop conf is rebuilt on every call
+    because runtime confs can change."""
+    global _PATH_CLASS
+    gateway = spark.sparkContext._gateway
+    if _PATH_CLASS[0] is not gateway:
+        _PATH_CLASS = (gateway, gateway.jvm.org.apache.hadoop.fs.Path)
+    root = _PATH_CLASS[1](path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return root.getFileSystem(conf), root
+
+
+def data_files(spark: SparkSession, path: str) -> tuple[str, list]:
+    """``(qualified path, FileStatus of each data file)`` of a file scan
+    of ``path``: a file is itself; a directory its data files, found
+    recursively, skipping what Spark's file index skips (names starting
+    with ``_`` or ``.``: ``_SUCCESS``, ``.crc`` checksums,
+    ``_temporary``); a missing path has none."""
+    fs, root = hadoop_fs(spark, path)
+    files = []
+    if fs.exists(root):
+        pending = [fs.getFileStatus(root)]
+        while pending:
+            status = pending.pop()
+            if not status.isDirectory():
+                files.append(status)
+                continue
+            pending.extend(
+                child
+                for child in fs.listStatus(status.getPath())
+                if not child.getPath().getName().startswith(("_", "."))
+            )
+    return fs.makeQualified(root).toString(), files
+
+
 def input_bytes(spark: SparkSession, path: str) -> int:
-    """Bytes a file scan of ``path`` reads, sized through the Hadoop
-    FileSystem that owns the path, so a ``file://``, ``hdfs://`` or
-    ``s3a://`` URI sizes exactly like a plain local path. A file gives its
-    length; a directory the recursive sum of its data files, skipping what
-    Spark's file index skips (names starting with ``_`` or ``.``:
-    ``_SUCCESS``, ``.crc`` checksums, ``_temporary``); a missing path 0."""
-    jvm = spark.sparkContext._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
-    if not fs.exists(root):
-        return 0
-    total = 0
-    pending = [fs.getFileStatus(root)]
-    while pending:
-        status = pending.pop()
-        if not status.isDirectory():
-            total += status.getLen()
-            continue
-        pending.extend(
-            child
-            for child in fs.listStatus(status.getPath())
-            if not child.getPath().getName().startswith(("_", "."))
-        )
-    return total
+    """Bytes a file scan of ``path`` reads: the summed length of its
+    ``data_files``, 0 for a missing path."""
+    return sum(status.getLen() for status in data_files(spark, path)[1])
 
 
 def fan_out_small_input(

@@ -16,14 +16,17 @@ from sealnet_etl_spark.catalog import _REGRADE_FIRST
 from sealnet_etl_spark.registry import all_queries
 
 #: Default-tier sweep set: the queries whose plans changed last
-#: (_REGRADE_FIRST) plus every query that reaches the input sizer or the
-#: fan-out gate (sources.input_bytes / sources.fan_out_small_input).
+#: (_REGRADE_FIRST), every query that reaches the input sizer or the
+#: fan-out gate (sources.input_bytes / sources.fan_out_small_input), and
+#: every query that reaches the engine store (sources/store.py).
 SWEPT: tuple[str, ...] = tuple(
     sorted(
         set(_REGRADE_FIRST)
         | {
+            "jn_bucketed_colocated",
             "llm_boilerplate_ngrams",
             "llm_contamination_report",
+            "llm_context_length_histogram",
             "llm_cross_source_dup_matrix",
             "llm_cross_source_overlap",
             "llm_decontaminate",
@@ -33,17 +36,36 @@ SWEPT: tuple[str, ...] = tuple(
             "llm_dedup_degree_report",
             "llm_dedup_threshold_sweep",
             "llm_effective_tokens",
+            "llm_embedding_near_dup",
+            "llm_hard_negatives",
+            "llm_hard_negatives_batch",
+            "llm_ivf_ann_topk",
             "llm_ivf_cell_probe",
             "llm_ivf_cell_probe_nprobe",
             "llm_ivf_probe_rebalanced",
             "llm_ivf_serve_accumulated",
+            "llm_ivfpq_ann_topk",
+            "llm_knn_classifier",
             "llm_leakage_free_split",
             "llm_lsh_ann_topk",
+            "llm_margin_mining",
             "llm_minhash_near_dup_pairs",
+            "llm_multimodal_incremental_near_dup",
+            "llm_pack_bins",
+            "llm_pack_efficiency",
+            "llm_pack_lineage",
             "llm_pagerank",
             "llm_quality_dedup_crosstab",
+            "llm_semantic_dedup",
+            "llm_sequence_pack",
+            "llm_shard_skew_report",
             "llm_substring_dedup_apply",
             "llm_substring_dedup_spans",
+            "llm_tiled_topk_cosine",
+            "llm_token_count",
+            "llm_token_gini",
+            "llm_tokenizer_fertility",
+            "llm_topk_cosine",
             "llm_triangle_count",
             "llm_winnowing_fingerprints",
             "src_compact_small_files",

@@ -98,18 +98,33 @@ def test_fan_out_arms_give_identical_rows(
 def test_input_sizing_lives_in_one_module():
     """Local-filesystem sizing (os.walk, getsize) and reads of
     maxPartitionBytes belong to sources/tables.py only; setting the conf
-    (a scan override) is allowed anywhere."""
+    (a scan override) is allowed anywhere. Store locations and write
+    memos (the warehouse dir, ``file:`` strips, local corpus identities,
+    write locks) belong to sources/ only."""
     package = Path(__file__).resolve().parent.parent / "sealnet_etl_spark"
-    banned = re.compile(
-        r"os\.walk|getsize|conf\.get\(\s*[\"']spark\.sql\.files\.maxPartitionBytes"
-    )
+    rules = [
+        (
+            re.compile(
+                r"os\.walk|getsize|"
+                r"conf\.get\(\s*[\"']spark\.sql\.files\.maxPartitionBytes"
+            ),
+            "sources/tables.py",
+        ),
+        (
+            re.compile(
+                r"threading\.Lock\(|abspath|spark\.sql\.warehouse\.dir|\^file:"
+            ),
+            "sources/",
+        ),
+    ]
     offenders = []
     for path in sorted(package.rglob("*.py")):
         rel = path.relative_to(package).as_posix()
-        if rel == "sources/tables.py":
-            continue
         text = path.read_text()
-        for m in banned.finditer(text):
-            line = text.count("\n", 0, m.start()) + 1
-            offenders.append(f"{rel}:{line}")
+        for banned, home in rules:
+            if rel.startswith(home):
+                continue
+            for m in banned.finditer(text):
+                line = text.count("\n", 0, m.start()) + 1
+                offenders.append(f"{rel}:{line}")
     assert not offenders, offenders
