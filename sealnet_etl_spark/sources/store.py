@@ -1,10 +1,15 @@
-"""The engine's derived stores: where each one lives and when it is rebuilt.
+"""Where the engine writes, and when a write is reused.
 
-A store is data the engine derives from a corpus and reuses within one
-session: corpus tiles, PQ code tables, the token-count frame, persisted
-indexes and eval postings. Every store lives at
+Everything the engine writes lives at
 
     {spark.sql.warehouse.dir}/_{kind}/{app id}/{tag}[_params]
+
+That covers data it derives from a corpus and reuses within one session
+(corpus tiles, PQ code tables, the token-count frame, persisted indexes,
+eval postings, stream replays) and the per-call roots of query bodies
+that write (kind ``scratch``: sinks, checkpoints, round-trip copies).
+The one local path is the schema-drift layout (``ingest._drift_base``),
+which its DuckDB oracle names at import, before any session exists.
 
 The warehouse URI is used as Spark reports it, so the store sits on
 whatever filesystem the warehouse does (HDFS/S3 on a cluster). The app id
@@ -33,20 +38,24 @@ def warehouse(spark: SparkSession) -> str:
     return spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
 
 
-def store_path(spark: SparkSession, kind: str, source: str, *params) -> str:
-    """Path of the ``kind`` store derived from ``source`` (a file or
-    directory) in this session. The tag hashes the Hadoop-qualified
-    ``source`` with the newest modification time, count and total length
-    of the data files a scan of it reads (``tables.data_files``, the rule
-    ``input_bytes`` sizes by), so a plain path and its ``file://`` form
-    share one store, two corpora that share a leaf name never do, and a
-    rewrite of any data file rolls the tag."""
+def corpus_tag(spark: SparkSession, source: str) -> str:
+    """Name of the corpus at ``source`` (a file or directory): a hash of
+    its Hadoop-qualified path with the newest modification time, count
+    and total length of the data files a scan of it reads
+    (``tables.data_files``, the rule ``input_bytes`` sizes by). A plain
+    path and its ``file://`` form share one tag, two corpora that share a
+    leaf name never do, and a rewrite of any data file rolls the tag."""
     qualified, files = data_files(spark, source)
     stamp = max((f.getModificationTime() for f in files), default=-1)
     nbytes = sum(f.getLen() for f in files)
     ident = f"{qualified}|{stamp}|{len(files)}|{nbytes}"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:12]
-    leaf = "_".join([tag, *map(str, params)])
+    return hashlib.md5(ident.encode()).hexdigest()[:12]
+
+
+def store_path(spark: SparkSession, kind: str, source: str, *params) -> str:
+    """Path of the ``kind`` store derived from ``source`` in this session,
+    named by ``corpus_tag(spark, source)`` and ``params``."""
+    leaf = "_".join([corpus_tag(spark, source), *map(str, params)])
     app_id = spark.sparkContext.applicationId
     return f"{warehouse(spark).rstrip('/')}/_{kind}/{app_id}/{leaf}"
 
@@ -68,6 +77,12 @@ def write_once(path: str, build: Callable[[str], object]) -> str:
                 build(path)
                 _WRITTEN.add(path)
     return path
+
+
+def exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of its Hadoop FileSystem."""
+    fs, root = hadoop_fs(spark, path)
+    return bool(fs.exists(root))
 
 
 def remove(spark: SparkSession, path: str) -> None:

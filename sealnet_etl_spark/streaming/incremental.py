@@ -13,7 +13,7 @@ matches so far" over an unbounded ingest feed.
 from __future__ import annotations
 
 import random
-import shutil
+from collections import Counter
 
 import pandas as pd
 
@@ -23,9 +23,14 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..sources.store import store_path, write_once
-from ..sources.tables import fan_out_small_input, input_bytes, load_table
-from .replay import run_available_now, write_replay_chunks
+from ..sources.store import exists, remove, store_path, write_once
+from ..sources.tables import (
+    data_files,
+    fan_out_small_input,
+    input_bytes,
+    load_table,
+)
+from .replay import drain, ntile_chunks, replay_dir, run_available_now
 
 EMBED_DIM = 64
 TOP_K = 3
@@ -96,18 +101,17 @@ def _topk_stateful(key, pdf_iter, state):
 
 def embeddings_replay_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 2) -> str:
     """Replay the embeddings table as n_chunks vec_id-ordered chunks."""
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()  # null vectors crash the numpy batch
+    return replay_dir(
+        spark,
+        sf_dir,
+        "embeddings",
+        lambda emb: ntile_chunks(
+            # null vectors crash the numpy batch
+            emb.filter(F.col("embedding").isNotNull()), n_chunks, "vec_id"
+        ),
+        "ntile",
+        n_chunks,
     )
-    w = Window.orderBy("vec_id")
-    chunked = emb.withColumn("__chunk", F.ntile(n_chunks).over(w)).cache()
-    chunks = [
-        chunked.filter(F.col("__chunk") == i).drop("__chunk")
-        for i in range(1, n_chunks + 1)
-    ]
-    path = write_replay_chunks(spark, sf_dir, "embeddings_replay", chunks)
-    chunked.unpersist()
-    return path
 
 
 _QV_SQL = "[" + ", ".join(str(x) for x in QUERY_VECTOR) + "]::DOUBLE[]"
@@ -182,25 +186,23 @@ def str_incremental_topk_similarity(spark: SparkSession, sf_dir: str) -> DataFra
 #: oracle recomputes, unlike an arrival-time split.
 N_DOC_CHUNKS = 3
 
-_DOC_REPLAY_CACHE: dict[str, str] = {}
-
-
 def _docs_replay_dir(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _DOC_REPLAY_CACHE:
-        return _DOC_REPLAY_CACHE[sf_dir]
     # source/lang ride along for the contamination and quality monitors;
     # near-dup's readStream schema names only (doc_id, text), so parquet
     # by-name column pruning keeps its input unchanged
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "lang", "text"
+    return replay_dir(
+        spark,
+        sf_dir,
+        "documents",
+        lambda docs: [
+            docs.select("doc_id", "source", "lang", "text").filter(
+                F.pmod("doc_id", F.lit(N_DOC_CHUNKS)) == i
+            )
+            for i in range(N_DOC_CHUNKS)
+        ],
+        "mod",
+        N_DOC_CHUNKS,
     )
-    chunks = [
-        docs.filter(F.pmod("doc_id", F.lit(N_DOC_CHUNKS)) == i)
-        for i in range(N_DOC_CHUNKS)
-    ]
-    path = write_replay_chunks(spark, sf_dir, "docs_replay", chunks)
-    _DOC_REPLAY_CACHE[sf_dir] = path
-    return path
 
 
 from ..operators.dedup import (  # noqa: E402
@@ -272,17 +274,12 @@ def str_streaming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Within-batch pairs are by design not emitted (the one-shot batch
     operator owns those). Banding recall at J ≥ 0.8 is the documented
     ≥ 0.9997, which is why the exact oracle still hash-matches."""
-    import os as _os
-
-    from ..sources.ingest import _scratch
-
     replay = _docs_replay_dir(spark, sf_dir)
-    index_store = _scratch(sf_dir, "str_neardup_index")
-    shingle_store = _scratch(sf_dir, "str_neardup_shingles")
-    results_store = _scratch(sf_dir, "str_neardup_pairs")
-    checkpoint = _scratch(sf_dir, "str_streaming_near_dup_ckpt")
-    for p in (index_store, shingle_store, results_store, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "str_streaming_near_dup")
+    remove(spark, root)
+    index_store = f"{root}/index"
+    shingle_store = f"{root}/shingles"
+    results_store = f"{root}/report"
 
     def _cap(df: DataFrame, id_col: str) -> DataFrame:
         w = Window.partitionBy("band_key").orderBy(id_col)
@@ -396,7 +393,7 @@ def str_streaming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{index_store}/chunk={batch_id}"
         )
 
-        if batch_id > 0 and _os.path.isdir(index_store):
+        if batch_id > 0 and exists(spark, index_store):
             index = stream_spark.read.parquet(index_store)
             new_keys = index.filter(F.col("chunk") == batch_id).select(
                 F.col("doc_id").alias("doc_new"), "band_key"
@@ -470,14 +467,8 @@ def str_streaming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if not _os.path.isdir(results_store):
+    drain(stream, process, f"{root}/ckpt")
+    if not exists(spark, results_store):
         return spark.createDataFrame(
             [], "doc_prior long, doc_new long, jaccard double"
         )
@@ -580,15 +571,10 @@ def str_contamination_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replay is the near-dup family's 3-chunk doc_id % 3 split, so the
     oracle recomputes batch membership exactly; integer columns and an
     exact floor rate make the per-batch rows bit-comparable."""
-    import os as _os
-
-    from ..sources.ingest import _scratch
-
     replay = _docs_replay_dir(spark, sf_dir)
-    results_store = _scratch(sf_dir, "str_contamination_report")
-    checkpoint = _scratch(sf_dir, "str_contamination_ckpt")
-    for p in (results_store, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "str_contamination_monitor")
+    remove(spark, root)
+    results_store = f"{root}/report"
 
     # the persisted eval postings: distinct shingles of the (static)
     # held-out eval docs — an eval-postings store written ONCE per
@@ -666,14 +652,8 @@ def str_contamination_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if not _os.path.isdir(results_store):
+    drain(stream, process, f"{root}/ckpt")
+    if not exists(spark, results_store):
         return spark.createDataFrame(
             [],
             "chunk bigint, source string, n_train_docs bigint, "
@@ -738,16 +718,12 @@ def str_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. Results write under ``chunk=<batch_id>`` partitions with
     per-partition overwrite — the write-ahead-by-batchId idempotency
     pattern shared by the whole streaming monitoring family."""
-    import os as _os
-
     from ..operators.textstats import quality_flags
-    from ..sources.ingest import _scratch
 
     replay = _docs_replay_dir(spark, sf_dir)
-    results_store = _scratch(sf_dir, "str_quality_report")
-    checkpoint = _scratch(sf_dir, "str_quality_ckpt")
-    for p in (results_store, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "str_quality_monitor")
+    remove(spark, root)
+    results_store = f"{root}/report"
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         flags = quality_flags(batch_df).join(
@@ -792,14 +768,8 @@ def str_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if not _os.path.isdir(results_store):
+    drain(stream, process, f"{root}/ckpt")
+    if not exists(spark, results_store):
         return spark.createDataFrame(
             [],
             "chunk bigint, source string, n_docs bigint, n_pass bigint, "
@@ -892,15 +862,10 @@ def str_contamination_monitor_fixed(
     postings; chunk=<batch_id> per-partition overwrite idempotency;
     batch side shingles only its own docs). Integer columns + exact floor rate, bit-comparable to
     the brute-force oracle."""
-    import os as _os
-
-    from ..sources.ingest import _scratch
-
     replay = _docs_replay_dir(spark, sf_dir)
-    results_store = _scratch(sf_dir, "str_contamination_fixed_report")
-    checkpoint = _scratch(sf_dir, "str_contamination_fixed_ckpt")
-    for p in (results_store, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "str_contamination_monitor_fixed")
+    remove(spark, root)
+    results_store = f"{root}/report"
 
     doc_bytes = input_bytes(spark, f"{sf_dir}/documents.parquet")
     eval_store = _eval_postings(
@@ -966,14 +931,8 @@ def str_contamination_monitor_fixed(
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if not _os.path.isdir(results_store):
+    drain(stream, process, f"{root}/ckpt")
+    if not exists(spark, results_store):
         return spark.createDataFrame(
             [],
             "chunk bigint, source string, n_train_docs bigint, "
@@ -1044,15 +1003,10 @@ def str_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-integer shares with exact floor division; dev_micro is a signed
     bigint. Results write under chunk=<batch_id> with per-partition
     overwrite — the family's write-ahead idempotency pattern."""
-    import os as _os
-
-    from ..sources.ingest import _scratch
-
     replay = _docs_replay_dir(spark, sf_dir)
-    results_store = _scratch(sf_dir, "str_mixture_report")
-    checkpoint = _scratch(sf_dir, "str_mixture_ckpt")
-    for p in (results_store, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "str_mixture_monitor")
+    remove(spark, root)
+    results_store = f"{root}/report"
 
     # the target mixture: |sources| rows + the scalar total, tiny at any
     # corpus size — a config artifact a deployment loads, not data. It is
@@ -1104,14 +1058,8 @@ def str_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if not _os.path.isdir(results_store):
+    drain(stream, process, f"{root}/ckpt")
+    if not exists(spark, results_store):
         return spark.createDataFrame(
             [],
             "chunk bigint, source string, n_docs bigint, share_micro "
@@ -1127,11 +1075,6 @@ def str_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: process-scoped replay-dir memo for the embeddings drift replay (the
-#: _DOC_REPLAY_CACHE discipline).
-_EMB_DRIFT_REPLAY_CACHE: dict = {}
-
-
 def _emb_drift_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """Embeddings replayed as N_DOC_CHUNKS vec_id % N chunks — the same
     pure-function chunking as the docs replay, so the SQL oracle
@@ -1139,20 +1082,19 @@ def _emb_drift_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     used by the top-k replay, is not SQL-stable across engines). Null
     vectors are dropped here, matching every similarity kernel's
     load_embeddings contract."""
-    if sf_dir in _EMB_DRIFT_REPLAY_CACHE:
-        return _EMB_DRIFT_REPLAY_CACHE[sf_dir]
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
+    return replay_dir(
+        spark,
+        sf_dir,
+        "embeddings",
+        lambda emb: [
+            emb.filter(F.col("embedding").isNotNull())
+            .filter(F.pmod("vec_id", F.lit(N_DOC_CHUNKS)) == i)
+            .select("vec_id", "label", "embedding")
+            for i in range(N_DOC_CHUNKS)
+        ],
+        "mod",
+        N_DOC_CHUNKS,
     )
-    chunks = [
-        emb.filter(F.pmod("vec_id", F.lit(N_DOC_CHUNKS)) == i).select(
-            "vec_id", "label", "embedding"
-        )
-        for i in range(N_DOC_CHUNKS)
-    ]
-    path = write_replay_chunks(spark, sf_dir, "emb_drift_replay", chunks)
-    _EMB_DRIFT_REPLAY_CACHE[sf_dir] = path
-    return path
 
 
 _DRIFT_MONITOR_ORACLE = f"""
@@ -1217,15 +1159,10 @@ def str_embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     |labels|×64 partials) + a broadcast join — no state store, batches
     independent by semantics. chunk=<batch_id> per-partition overwrite
     gives the family's write-ahead idempotency."""
-    import os as _os
-
-    from ..sources.ingest import _scratch
-
     replay = _emb_drift_replay_dir(spark, sf_dir)
-    results_store = _scratch(sf_dir, "str_drift_report")
-    checkpoint = _scratch(sf_dir, "str_drift_ckpt")
-    for p in (results_store, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "str_embedding_drift_monitor")
+    remove(spark, root)
+    results_store = f"{root}/report"
 
     def int_components(df: DataFrame) -> DataFrame:
         return df.select(
@@ -1295,14 +1232,8 @@ def str_embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if not _os.path.isdir(results_store):
+    drain(stream, process, f"{root}/ckpt")
+    if not exists(spark, results_store):
         return spark.createDataFrame(
             [], "chunk bigint, label int, n_vecs bigint, centroid_cos double"
         )
@@ -1381,20 +1312,16 @@ def str_ivf_ingest_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent by semantics; chunk=<batch_id> per-partition overwrite
     idempotency. All-integer assignment and exact floor shares —
     bit-comparable to the brute-force oracle."""
-    import os as _os
-
     from ..operators.similarity import (
         _ivf_assign_cells,
         _ivf_frozen_seeds,
         _ivf_int_vectors,
     )
-    from ..sources.ingest import _scratch
 
     replay = _emb_drift_replay_dir(spark, sf_dir)
-    results_store = _scratch(sf_dir, "str_ivf_ingest_report")
-    checkpoint = _scratch(sf_dir, "str_ivf_ingest_ckpt")
-    for p in (results_store, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "str_ivf_ingest_monitor")
+    remove(spark, root)
+    results_store = f"{root}/report"
 
     seeds = _ivf_frozen_seeds(spark, _ivf_int_vectors(spark, sf_dir))
 
@@ -1430,14 +1357,8 @@ def str_ivf_ingest_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    if not _os.path.isdir(results_store):
+    drain(stream, process, f"{root}/ckpt")
+    if not exists(spark, results_store):
         return spark.createDataFrame(
             [],
             "chunk bigint, cell_id bigint, n_assigned bigint, "
@@ -1527,21 +1448,17 @@ def str_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the store is the standard IVF posting layout: partitioned by
     arrival chunk, 16 bytes/vector, mergeable offline into cell-major
     order without recomputing a single assignment."""
-    import os as _os
-
     from ..operators.similarity import (
         _ivf_assign_cells,
         _ivf_frozen_seeds,
         _ivf_int_vectors,
     )
-    from ..sources.ingest import _scratch
 
     replay = _emb_drift_replay_dir(spark, sf_dir)
-    base_store = _scratch(sf_dir, "str_ivf_append_base")
-    append_store = _scratch(sf_dir, "str_ivf_append_chunks")
-    checkpoint = _scratch(sf_dir, "str_ivf_append_ckpt")
-    for p in (base_store, append_store, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "str_ivf_index_append")
+    remove(spark, root)
+    base_store = f"{root}/base"
+    append_store = f"{root}/chunks"
 
     ei_static = _ivf_int_vectors(spark, sf_dir)
     seeds = _ivf_frozen_seeds(spark, ei_static)
@@ -1575,17 +1492,11 @@ def str_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, process, f"{root}/ckpt")
 
     empty = "cell_id bigint, n_old bigint, n_streamed bigint, " \
         "n_total bigint, n_chunks bigint"
-    if not _os.path.isdir(append_store):
+    if not exists(spark, append_store):
         return spark.createDataFrame([], empty)
     base = (
         spark.read.parquet(base_store)
@@ -1708,21 +1619,17 @@ def str_ivf_rebalance_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     |cells|-row count frame lands in the store per trigger. The
     cumulative re-rank runs over the ≤ |chunks|x|cells| store rows — a
     plan-constant frame, never corpus-sized, at any SF."""
-    import os as _os
-
     from ..operators.similarity import (
         IVF_SPLIT_TOP,
         _ivf_assign_cells,
         _ivf_frozen_seeds,
         _ivf_int_vectors,
     )
-    from ..sources.ingest import _scratch
 
     replay = _emb_drift_replay_dir(spark, sf_dir)
-    results_store = _scratch(sf_dir, "str_ivf_trigger_counts")
-    checkpoint = _scratch(sf_dir, "str_ivf_trigger_ckpt")
-    for p in (results_store, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "str_ivf_rebalance_trigger")
+    remove(spark, root)
+    results_store = f"{root}/report"
 
     seeds = _ivf_frozen_seeds(spark, _ivf_int_vectors(spark, sf_dir))
 
@@ -1751,19 +1658,13 @@ def str_ivf_rebalance_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, process, f"{root}/ckpt")
 
     empty = (
         "chunk bigint, cell_id bigint, n_batch bigint, cum_n bigint, "
         "split_candidate bigint"
     )
-    if not _os.path.isdir(results_store):
+    if not exists(spark, results_store):
         return spark.createDataFrame([], empty)
     counts = spark.read.parquet(results_store).select(
         F.col("chunk").cast("bigint").alias("chunk"), "cell_id", "n"
@@ -1889,19 +1790,16 @@ def llm_ivf_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nightly posting-merge every IVF serving tier runs; the
     file-per-cell invariant is what keeps probe-side open() counts at
     O(nprobe), not O(chunks)."""
-    import os as _os
-
     from ..operators.similarity import (
         _ivf_assign_cells,
         _ivf_frozen_seeds,
         _ivf_int_vectors,
     )
-    from ..sources.ingest import _scratch
 
-    src_store = _scratch(sf_dir, "ivf_compact_src")
-    dst_store = _scratch(sf_dir, "ivf_compact_dst")
-    for p in (src_store, dst_store):
-        shutil.rmtree(p, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "llm_ivf_store_compact")
+    remove(spark, root)
+    src_store = f"{root}/src"
+    dst_store = f"{root}/dst"
 
     ei = _ivf_int_vectors(spark, sf_dir)
     seeds = _ivf_frozen_seeds(spark, ei)
@@ -1957,16 +1855,14 @@ def llm_ivf_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file census straight off the filesystem — |cells| directories,
     # driver-side by design (the audit must see the REAL layout, and a
     # |cells|-row listing is plan-constant at any corpus size)
-    files_rows = []
-    for d in sorted(_os.listdir(dst_store)):
-        if not d.startswith("cell_id="):
-            continue
-        n = sum(
-            1
-            for f in _os.listdir(_os.path.join(dst_store, d))
-            if f.endswith(".parquet")
-        )
-        files_rows.append((int(d.split("=", 1)[1]), n))
+    per_dir = Counter(
+        f.getPath().getParent().getName() for f in data_files(spark, dst_store)[1]
+    )
+    files_rows = [
+        (int(d.split("=", 1)[1]), n)
+        for d, n in sorted(per_dir.items())
+        if d.startswith("cell_id=")
+    ]
     files = spark.createDataFrame(
         files_rows, "cell_id bigint, n_files bigint"
     )
@@ -2072,23 +1968,19 @@ def str_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_ivf_store_compact shuffle with the anti-join fused before the
     exchange — deleted rows never travel. Between compactions, serving
     pays one anti-join; after, nothing."""
-    import os as _os
-
     from ..operators.similarity import (
         _ivf_assign_cells,
         _ivf_frozen_seeds,
         _ivf_int_vectors,
     )
-    from ..sources.ingest import _scratch
 
     replay = _emb_drift_replay_dir(spark, sf_dir)
-    base_store = _scratch(sf_dir, "str_ivf_del_base")
-    append_store = _scratch(sf_dir, "str_ivf_del_chunks")
-    tomb_store = _scratch(sf_dir, "str_ivf_del_tombs")
-    live_store = _scratch(sf_dir, "str_ivf_del_compacted")
-    checkpoint = _scratch(sf_dir, "str_ivf_del_ckpt")
-    for p in (base_store, append_store, tomb_store, live_store, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "str_ivf_index_delete")
+    remove(spark, root)
+    base_store = f"{root}/base"
+    append_store = f"{root}/chunks"
+    tomb_store = f"{root}/tombs"
+    live_store = f"{root}/compacted"
 
     ei_static = _ivf_int_vectors(spark, sf_dir)
     seeds = _ivf_frozen_seeds(spark, ei_static)
@@ -2130,19 +2022,13 @@ def str_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, process, f"{root}/ckpt")
 
     empty = (
         "cell_id bigint, n_indexed bigint, n_deleted bigint, "
         "n_live bigint, n_compacted bigint"
     )
-    if not _os.path.isdir(append_store):
+    if not exists(spark, append_store):
         return spark.createDataFrame([], empty)
     # explicit schemas on every store read-back: chunk-partitioned and
     # partitionBy writes of EMPTY frames leave no schema-bearing files,

@@ -15,20 +15,26 @@ one, a 100 TB/day stream grows state forever.
 
 from __future__ import annotations
 
-import shutil
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from ..registry import query
 from ..sources import load_table
-from ..sources.ingest import _scratch
+from ..sources.store import exists, remove, store_path
+from ..sources.tables import data_files
 from ..operators.windows import FUNNEL_ORACLE_SQL
-from .replay import events_replay_dir, read_events_stream, run_available_now
+from .replay import (
+    REPLAY_CHUNKS,
+    drain,
+    events_replay_dir,
+    ntile_chunks,
+    read_events_stream,
+    replay_dir,
+    run_available_now,
+)
 
 WATERMARK = "10 minutes"
 
@@ -397,21 +403,14 @@ def str_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_events_stream(spark, replay).select(
         "event_id", "user_id", "event_type"
     )
-    sink = _scratch(sf_dir, "events_sink")
-    checkpoint = _scratch(sf_dir, "events_sink_ckpt")
-    shutil.rmtree(sink, ignore_errors=True)
-    shutil.rmtree(checkpoint, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "str_foreach_batch_sink")
+    remove(spark, root)
+    sink = f"{root}/sink"
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(sink)
 
-    query_handle = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query_handle.awaitTermination()
+    drain(stream, write_batch, f"{root}/ckpt")
     return spark.read.parquet(sink)
 
 
@@ -553,25 +552,17 @@ def str_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     late-arrival horizon instead of growing with the whole stream. The
     streaming twin of str_dedup; oracle = each event exactly once.
     """
-    from .replay import REPLAY_CHUNKS, _REPLAY_CACHE, write_replay_chunks
-
-    cache_key = (sf_dir, "events_dup_replay", REPLAY_CHUNKS)
-    replay = _REPLAY_CACHE.get(cache_key)
-    if replay is None:
-        events = load_table(spark, sf_dir, "events")
-        w = Window.orderBy("ts", "event_id")
-        chunked = events.withColumn(
-            "__chunk", F.ntile(REPLAY_CHUNKS).over(w)
-        ).cache()
-        chunks = [
-            chunked.filter(F.col("__chunk") == i).drop("__chunk")
-            for i in range(1, REPLAY_CHUNKS + 1)
-        ]
-        doubled = [c.unionByName(c) for c in chunks]
-        replay = write_replay_chunks(spark, sf_dir, "events_dup_replay", doubled)
-        chunked.unpersist()
-        _REPLAY_CACHE[cache_key] = replay
-
+    replay = replay_dir(
+        spark,
+        sf_dir,
+        "events",
+        lambda events: (
+            c.unionByName(c)
+            for c in ntile_chunks(events, REPLAY_CHUNKS, "ts", "event_id")
+        ),
+        "doubled",
+        REPLAY_CHUNKS,
+    )
     stream = read_events_stream(spark, replay)
     deduped = (
         stream.withWatermark("ts", WATERMARK)
@@ -744,15 +735,6 @@ def make_versioned_upsert(base: str):
     from scratch. Replay idempotence is pinned by
     tests/test_streaming_restart.py."""
 
-    def _fs_exists(sess: SparkSession, path: str) -> bool:
-        """Hadoop-FS existence check — works on HDFS/S3/object storage,
-        where an os.path check on the driver is silently False and every
-        batch would discard accumulated state (review finding)."""
-        jvm = sess._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(sess._jsc.hadoopConfiguration())
-        return fs.exists(hpath)
-
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
         agg = batch_df.groupBy("user_id").agg(
@@ -760,7 +742,7 @@ def make_versioned_upsert(base: str):
             F.sum("value").alias("total_value"),
         )
         prev_path = f"{base}/v{batch_id - 1}"
-        if batch_id > 0 and _fs_exists(sess, prev_path):
+        if batch_id > 0 and exists(sess, prev_path):
             state = sess.read.parquet(prev_path)
             agg = (
                 state.withColumnRenamed("n_events", "p_n")
@@ -801,30 +783,20 @@ def str_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-partitioned full-outer merge against a users-sized state table;
     the final state equals the batch aggregate, which the oracle states
     exactly."""
-    import glob
-    import os
     import re as _re
 
-    base = _scratch(sf_dir, "upsert_state")
-    shutil.rmtree(base, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, "str_foreach_batch_upsert")
+    remove(spark, root)
+    base = f"{root}/state"
     upsert = make_versioned_upsert(base)
 
     replay = events_replay_dir(spark, sf_dir)
-    stream = read_events_stream(spark, replay)
-    checkpoint = _scratch(sf_dir, "str_foreach_batch_upsert_ckpt")
-    shutil.rmtree(checkpoint, ignore_errors=True)
-    (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(read_events_stream(spark, replay), upsert, f"{root}/ckpt")
     # the newest on-disk version IS the recovery record — no driver state
     versions = [
         int(m.group(1))
-        for d in glob.glob(f"{base}/v*")
-        if (m := _re.fullmatch(r"v(\d+)", os.path.basename(d)))
+        for f in data_files(spark, base)[1]
+        if (m := _re.fullmatch(r"v(\d+)", f.getPath().getParent().getName()))
     ]
     final = spark.read.parquet(f"{base}/v{max(versions)}")
     return final.select(

@@ -13,14 +13,14 @@ the chunk writer.
 from __future__ import annotations
 
 import os
-import shutil
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..sources.ingest import _scratch
+from ..sources.store import remove, store_path, write_once
 from ..sources.tables import load_table
 
 EVENTS_STREAM_SCHEMA = T.StructType(
@@ -35,16 +35,37 @@ EVENTS_STREAM_SCHEMA = T.StructType(
 )
 
 
-def write_replay_chunks(
-    spark: SparkSession, sf_dir: str, name: str, chunk_dfs: list[DataFrame]
+def replay_dir(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    chunks: Callable[[DataFrame], Iterable[DataFrame]],
+    *params,
 ) -> str:
-    """Write chunk DataFrames sequentially into one directory (one file per
-    chunk, ascending mtime) and return the directory path."""
-    path = _scratch(sf_dir, name)
-    shutil.rmtree(path, ignore_errors=True)
-    for chunk in chunk_dfs:
-        chunk.coalesce(1).write.mode("append").parquet(path)
-    return path
+    """Path of a replay of ``table``: the frames ``chunks(table frame)``
+    yields, written in order into one directory (one file per chunk,
+    ascending mtime). It is a store tagged by the table and ``params``,
+    written once per session; the build removes the path first, so a
+    retry after a failed build starts clean."""
+
+    def build(path: str) -> None:
+        remove(spark, path)
+        for chunk in chunks(load_table(spark, sf_dir, table)):
+            chunk.coalesce(1).write.mode("append").parquet(path)
+
+    source = f"{sf_dir}/{table}.parquet"
+    return write_once(store_path(spark, "replay", source, *params), build)
+
+
+def ntile_chunks(df: DataFrame, n_chunks: int, *order: str) -> Iterable[DataFrame]:
+    """``df`` as n_chunks chunks in ``order`` (chunk i holds the i-th
+    quantile), computed once for all chunks."""
+    chunked = df.withColumn(
+        "__chunk", F.ntile(n_chunks).over(Window.orderBy(*order))
+    ).cache()
+    for i in range(1, n_chunks + 1):
+        yield chunked.filter(F.col("__chunk") == i).drop("__chunk")
+    chunked.unpersist()
 
 
 #: Micro-batches per bounded replay. Two chunks keep the multi-batch
@@ -55,41 +76,30 @@ def write_replay_chunks(
 #: on the FINAL watermark (max ts − delay after the no-data flush batch).
 REPLAY_CHUNKS = int(os.environ.get("SPARK_GRAFT_REPLAY_CHUNKS", "2"))
 
-#: One replay materialization per (sf_dir, flavor) per process: the local
-#: mirror runs all 13 str_* queries in one session, and the chunk write
-#: (global ntile + sequential parquet appends) is identical each time.
-_REPLAY_CACHE: dict[tuple[str, str, int], str] = {}
-
 
 def events_replay_dir(
     spark: SparkSession, sf_dir: str, n_chunks: int = REPLAY_CHUNKS
 ) -> str:
     """Replay the events table as n_chunks ts-ordered chunks (chunk i holds
     the i-th quantile of event time)."""
-    key = (sf_dir, "events_replay", n_chunks)
-    if key in _REPLAY_CACHE:
-        return _REPLAY_CACHE[key]
-    events = load_table(spark, sf_dir, "events")
-    w = Window.orderBy("ts", "event_id")
-    chunked = events.withColumn("__chunk", F.ntile(n_chunks).over(w)).cache()
-    chunks = [
-        chunked.filter(F.col("__chunk") == i).drop("__chunk")
-        for i in range(1, n_chunks + 1)
-    ]
-    path = write_replay_chunks(spark, sf_dir, "events_replay", chunks)
-    chunked.unpersist()
-    _REPLAY_CACHE[key] = path
-    return path
+    return replay_dir(
+        spark,
+        sf_dir,
+        "events",
+        lambda events: ntile_chunks(events, n_chunks, "ts", "event_id"),
+        "ntile",
+        n_chunks,
+    )
 
 
-def read_events_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
+def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming scan of the replay directory, one chunk file per
     micro-batch (maxFilesPerTrigger=1) so the batch sequence is the chunk
     sequence."""
     return (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
+        .parquet(path)
     )
 
 
@@ -115,8 +125,8 @@ def run_available_now(
     therefore oracle-checkable (SURVEY.md §3.4/§5.2.3).
     """
     spark = stream_df.sparkSession
-    checkpoint = _scratch(sf_dir, f"{name}_ckpt")
-    shutil.rmtree(checkpoint, ignore_errors=True)
+    root = store_path(spark, "scratch", sf_dir, name)
+    remove(spark, root)
     previous = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
     try:
@@ -124,7 +134,7 @@ def run_available_now(
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint)
+            .option("checkpointLocation", f"{root}/ckpt")
             .trigger(availableNow=True)
             .start()
         )
@@ -134,3 +144,21 @@ def run_available_now(
         spark.conf.set("spark.sql.shuffle.partitions", previous)
     query.awaitTermination()
     return spark.table(name)
+
+
+def drain(
+    stream_df: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint: str,
+) -> None:
+    """Run ``process(batch_df, batch_id)`` on every micro-batch of
+    ``stream_df`` under Trigger.AvailableNow, checkpointing to
+    ``checkpoint``, and return once the replay is drained: the
+    foreachBatch form of ``run_available_now``."""
+    (
+        stream_df.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )

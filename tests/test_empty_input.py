@@ -18,7 +18,8 @@ from sealnet_etl_spark.registry import all_queries
 #: Default-tier sweep set: the queries whose plans changed last
 #: (_REGRADE_FIRST), every query that reaches the input sizer or the
 #: fan-out gate (sources.input_bytes / sources.fan_out_small_input), and
-#: every query that reaches the engine store (sources/store.py).
+#: every query that reaches the engine store (sources/store.py), stream
+#: replays included.
 SWEPT: tuple[str, ...] = tuple(
     sorted(
         set(_REGRADE_FIRST)
@@ -71,7 +72,22 @@ SWEPT: tuple[str, ...] = tuple(
             "src_compact_small_files",
             "str_contamination_monitor",
             "str_contamination_monitor_fixed",
+            "str_embedding_drift_monitor",
+            "str_foreach_batch_sink",
+            "str_foreach_batch_upsert",
+            "str_incremental_topk_similarity",
+            "str_mixture_monitor",
+            "str_quality_monitor",
+            "str_stateful_counter",
+            "str_stream_static_join",
+            "str_stream_stream_join",
+            "str_streaming_dedup",
+            "str_streaming_funnel",
             "str_streaming_near_dup",
+            "str_streaming_ohlc",
+            "str_streaming_session",
+            "str_streaming_sliding",
+            "str_streaming_tumbling",
         }
     )
 )

@@ -182,7 +182,7 @@ def test_dead_pid_drift_dirs_reaped(tmp_path):
     live pids must survive."""
     import os
 
-    from sealnet_etl_spark.operators.etl import _reap_dead_drift_dirs
+    from sealnet_etl_spark.sources.ingest import _reap_dead_drift_dirs
 
     own = tmp_path / f"schema_drift_{os.getpid()}"
     dead = tmp_path / "schema_drift_999999999"  # beyond pid_max

@@ -100,7 +100,10 @@ def test_input_sizing_lives_in_one_module():
     maxPartitionBytes belong to sources/tables.py only; setting the conf
     (a scan override) is allowed anywhere. Store locations and write
     memos (the warehouse dir, ``file:`` strips, local corpus identities,
-    write locks) belong to sources/ only."""
+    write locks) belong to sources/ only, and so do local-filesystem
+    writes, probes and listings (``shutil``, ``os.listdir``,
+    ``os.path.isdir``, ``glob``, a leaf-keyed scratch root, a FileSystem
+    handle of one's own)."""
     package = Path(__file__).resolve().parent.parent / "sealnet_etl_spark"
     rules = [
         (
@@ -113,6 +116,13 @@ def test_input_sizing_lives_in_one_module():
         (
             re.compile(
                 r"threading\.Lock\(|abspath|spark\.sql\.warehouse\.dir|\^file:"
+            ),
+            "sources/",
+        ),
+        (
+            re.compile(
+                r"shutil\.|os\.listdir|os\.path\.isdir|glob\.glob|"
+                r"_scratch\(|getFileSystem"
             ),
             "sources/",
         ),

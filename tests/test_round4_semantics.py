@@ -182,20 +182,18 @@ def test_rrf_scores_are_monotone_and_exact(spark, queries):
 def test_manifest_files_exist_on_disk(spark, queries):
     """The manifest's file counts must describe real files: re-deriving
     the count from the written directory agrees with the audit."""
-    import glob
-    import os
+    from collections import Counter
+
+    from sealnet_etl_spark.sources.store import store_path
+    from sealnet_etl_spark.sources.tables import data_files
 
     rows = queries["src_parquet_manifest"](spark, SF_DIR).collect()
-    from sealnet_etl_spark.sources.ingest import _scratch
-
-    base = _scratch(SF_DIR, "documents_manifest_shards")
+    base = store_path(spark, "scratch", SF_DIR, "src_parquet_manifest")
+    per_shard = Counter(
+        f.getPath().getParent().getName() for f in data_files(spark, base)[1]
+    )
     for r in rows:
-        files = [
-            f
-            for f in glob.glob(os.path.join(base, f"shard={r.shard}", "*"))
-            if f.endswith(".parquet")
-        ]
-        assert len(files) == r.n_files, (r.shard, files)
+        assert per_shard[f"shard={r.shard}"] == r.n_files, (r.shard, per_shard)
 
 
 def test_pack_lineage_partitions_every_doc(spark, queries):

@@ -5,15 +5,19 @@ without duplicating or dropping a row."""
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-
 import pytest
 
 from pyspark.sql import functions as F
 
+from sealnet_etl_spark.sources.store import store_path
+from sealnet_etl_spark.sources.tables import data_files
+
 from .conftest import SF_DIR
+
+
+def _written(spark, query: str, sub: str) -> str:
+    """Path of the ``sub`` store the last ``query`` run wrote."""
+    return f"{store_path(spark, 'scratch', SF_DIR, query)}/{sub}"
 
 
 def _drain(stream_df, sink: str, ckpt: str) -> None:
@@ -270,7 +274,6 @@ def test_ivf_append_store_is_idempotent_and_reconciles(spark):
     n_added (the streamed odd half IS the refresh's new batch)."""
     from sealnet_etl_spark.registry import all_queries
     from sealnet_etl_spark.sources import load_table
-    from sealnet_etl_spark.sources.ingest import _scratch
 
     queries = all_queries()
     first = sorted(
@@ -280,7 +283,7 @@ def test_ivf_append_store_is_idempotent_and_reconciles(spark):
     store_rows = sorted(
         tuple(r)
         for r in spark.read.parquet(
-            _scratch(SF_DIR, "str_ivf_append_chunks")
+            _written(spark, "str_ivf_index_append", "chunks")
         )
         .select("vec_id", "cell_id", "chunk")
         .collect()
@@ -292,7 +295,7 @@ def test_ivf_append_store_is_idempotent_and_reconciles(spark):
     store_replay = sorted(
         tuple(r)
         for r in spark.read.parquet(
-            _scratch(SF_DIR, "str_ivf_append_chunks")
+            _written(spark, "str_ivf_index_append", "chunks")
         )
         .select("vec_id", "cell_id", "chunk")
         .collect()
@@ -331,7 +334,6 @@ def test_accumulated_serve_matches_store(spark):
         _ivf_serve_topk,
     )
     from sealnet_etl_spark.registry import all_queries
-    from sealnet_etl_spark.sources.ingest import _scratch
 
     queries = all_queries()
     registered = sorted(
@@ -341,11 +343,11 @@ def test_accumulated_serve_matches_store(spark):
     assert registered
     # materialize the real stores (base + streamed appends)
     queries["str_ivf_index_append"](spark, SF_DIR).collect()
-    base = spark.read.parquet(_scratch(SF_DIR, "str_ivf_append_base")).select(
+    base = spark.read.parquet(_written(spark, "str_ivf_index_append", "base")).select(
         "vec_id", F.lit(0).cast("bigint").alias("snap"), "cell_id"
     )
     appended = spark.read.parquet(
-        _scratch(SF_DIR, "str_ivf_append_chunks")
+        _written(spark, "str_ivf_index_append", "chunks")
     ).select("vec_id", F.lit(1).cast("bigint").alias("snap"), "cell_id")
     store_assign = base.unionByName(appended)
 
@@ -370,13 +372,12 @@ def test_compact_source_matches_stream_store_and_layout(spark):
     posting contract: one parquet file per cell directory and vec_id
     ascending within each file (read back file-by-file, no sort)."""
     from sealnet_etl_spark.registry import all_queries
-    from sealnet_etl_spark.sources.ingest import _scratch
 
     queries = all_queries()
     append = queries["str_ivf_index_append"](spark, SF_DIR).collect()
     stream_store = sorted(
         tuple(r)
-        for r in spark.read.parquet(_scratch(SF_DIR, "str_ivf_append_chunks"))
+        for r in spark.read.parquet(_written(spark, "str_ivf_index_append", "chunks"))
         .select("vec_id", "cell_id", "chunk")
         .collect()
     )
@@ -384,7 +385,7 @@ def test_compact_source_matches_stream_store_and_layout(spark):
     compact = queries["llm_ivf_store_compact"](spark, SF_DIR).collect()
     src_store = sorted(
         tuple(r)
-        for r in spark.read.parquet(_scratch(SF_DIR, "ivf_compact_src"))
+        for r in spark.read.parquet(_written(spark, "llm_ivf_store_compact", "src"))
         .select("vec_id", "cell_id", "chunk")
         .collect()
     )
@@ -404,22 +405,15 @@ def test_compact_source_matches_stream_store_and_layout(spark):
         assert r.n_files == 1
 
     # physical layout: one file per cell dir, vec_id sorted within it
-    dst = _scratch(SF_DIR, "ivf_compact_dst")
-    cell_dirs = [d for d in os.listdir(dst) if d.startswith("cell_id=")]
-    assert len(cell_dirs) == len(compact)
-    for d in cell_dirs:
-        files = [
-            f
-            for f in os.listdir(os.path.join(dst, d))
-            if f.endswith(".parquet")
-        ]
-        assert len(files) == 1, (d, files)
-        ids = [
-            r.vec_id
-            for r in spark.read.parquet(
-                os.path.join(dst, d, files[0])
-            ).collect()
-        ]
+    per_cell = {}
+    for f in data_files(spark, _written(spark, "llm_ivf_store_compact", "dst"))[1]:
+        per_cell.setdefault(f.getPath().getParent().getName(), []).append(
+            f.getPath().toString()
+        )
+    assert len(per_cell) == len(compact)
+    for d, files in per_cell.items():
+        assert d.startswith("cell_id=") and len(files) == 1, (d, files)
+        ids = [r.vec_id for r in spark.read.parquet(files[0]).collect()]
         assert ids == sorted(ids), d
 
 
@@ -434,7 +428,6 @@ def test_ivf_delete_replay_is_noop(spark):
     (serve-path anti-join)."""
     from sealnet_etl_spark.registry import all_queries
     from sealnet_etl_spark.sources import load_table
-    from sealnet_etl_spark.sources.ingest import _scratch
     from sealnet_etl_spark.streaming.incremental import (
         IVF_DELETE_HEX_BOUND,
     )
@@ -448,7 +441,7 @@ def test_ivf_delete_replay_is_noop(spark):
     tombs_first = sorted(
         (r.vec_id, r.chunk)
         for r in spark.read.parquet(
-            _scratch(SF_DIR, "str_ivf_del_tombs")
+            _written(spark, "str_ivf_index_delete", "tombs")
         ).collect()
     )
     replay = sorted(
@@ -459,7 +452,7 @@ def test_ivf_delete_replay_is_noop(spark):
     tombs_replay = sorted(
         (r.vec_id, r.chunk)
         for r in spark.read.parquet(
-            _scratch(SF_DIR, "str_ivf_del_tombs")
+            _written(spark, "str_ivf_index_delete", "tombs")
         ).collect()
     )
     assert tombs_replay == tombs_first  # store idempotency
@@ -491,7 +484,7 @@ def test_ivf_delete_replay_is_noop(spark):
     compacted_ids = {
         r.vec_id
         for r in spark.read.parquet(
-            _scratch(SF_DIR, "str_ivf_del_compacted")
+            _written(spark, "str_ivf_index_delete", "compacted")
         ).collect()
     }
     assert compacted_ids.isdisjoint(expected)

@@ -172,10 +172,8 @@ def test_clustered_layout_buckets_do_not_overlap(spark, queries):
     """Bucket date ranges are disjoint and ordered — the property that
     makes directory-level pruning sound — and the physical layout exists
     (one directory per bucket)."""
-    import glob
-    import os
-
-    from sealnet_etl_spark.sources.ingest import _scratch
+    from sealnet_etl_spark.sources.store import store_path
+    from sealnet_etl_spark.sources.tables import data_files
 
     rows = sorted(
         queries["src_clustered_layout"](spark, SF_DIR).collect(),
@@ -183,7 +181,9 @@ def test_clustered_layout_buckets_do_not_overlap(spark, queries):
     )
     for prev, cur in zip(rows, rows[1:]):
         assert prev.max_ship < cur.min_ship
-    dirs = glob.glob(os.path.join(_scratch(SF_DIR, "lineitem_clustered"), "ship_bucket=*"))
+    layout = store_path(spark, "scratch", SF_DIR, "src_clustered_layout")
+    dirs = {f.getPath().getParent().getName() for f in data_files(spark, layout)[1]}
+    assert all(d.startswith("ship_bucket=") for d in dirs)
     assert len(dirs) == len(rows)
 
 
@@ -302,7 +302,6 @@ def test_user_erasure_drops_single_user_days(spark, tmp_path, monkeypatch):
     physically removed — dynamic overwrite alone can't replace a
     partition absent from the incoming frame (review finding)."""
     import sealnet_etl_spark.operators.etl as etl_mod
-    from sealnet_etl_spark.sources.ingest import _scratch
 
     # craft a tiny table where user 42 owns one whole day
     rows = [

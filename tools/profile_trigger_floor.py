@@ -21,10 +21,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> None:
-    import shutil
-
     from sealnet_etl_spark.session import get_spark
-    from sealnet_etl_spark.sources.ingest import _scratch
+    from sealnet_etl_spark.sources.store import remove, store_path
     from sealnet_etl_spark.streaming.incremental import _emb_drift_replay_dir
 
     sf_dir = "/root/testdata/sf0.1"
@@ -32,8 +30,8 @@ def main() -> None:
     replay = _emb_drift_replay_dir(spark, sf_dir)
 
     def run(tag: str, body) -> None:
-        ckpt = _scratch(sf_dir, f"floor_{tag}_ckpt")
-        shutil.rmtree(ckpt, ignore_errors=True)
+        ckpt = store_path(spark, "scratch", sf_dir, f"floor_{tag}")
+        remove(spark, ckpt)
         stream = (
             spark.readStream.schema(
                 "vec_id long, label int, embedding array<float>"
