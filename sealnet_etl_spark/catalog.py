@@ -153,6 +153,15 @@ _REGRADE_FIRST: tuple[str, ...] = (
     # round-13 LSH probe-side fan-out gate (rows-only class; the plan
     # changed, so it regrades first all the same)
     "llm_lsh_ann_topk",
+    # report stores read back with their written schema (no chunk cast);
+    # the quality pair shares one set of gate and report expressions, and
+    # the trend's self-join is gone
+    "str_quality_monitor",
+    "str_contamination_monitor",
+    "str_contamination_monitor_fixed",
+    "str_mixture_monitor",
+    "str_embedding_drift_monitor",
+    "llm_quality_trend",
 )
 
 #: ROUND-10 STATE: the never-driver-graded tail remains EMPTY — all 322

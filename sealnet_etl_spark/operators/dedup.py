@@ -263,30 +263,6 @@ def shingle_base_hashes(shingles: Column) -> Column:
     return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
 
 
-def minhash_signature_cols(base: Column) -> list[Column]:
-    """N_PERM minhash values over pre-hashed shingles: the classic
-    (a*h+b) mod p permutation family, min-reduced per permutation.
-    Everything is codegen'd JVM array math — no Python in the loop.
-
-    Each column is an ``aggregate`` FOLD with a scalar accumulator, not
-    transform→array_min: the transform form materializes one permuted
-    copy of the shingle-hash array per permutation — 64 transient long
-    arrays PER ROW — and that allocation churn is what broke the sf100
-    banding map stage at the default heap (GCLocker retry storms, then
-    OOM; measured round 9). The fold computes the identical min (null
-    init + least ≡ array_min on non-empty arrays; shingled inputs are
-    size-filtered upstream) with zero per-permutation allocations."""
-    null_acc = F.lit(None).cast("bigint")
-    return [
-        F.aggregate(
-            base,
-            null_acc,
-            lambda acc, h: F.least(acc, F.pmod(a * h + b, F.lit(_MERSENNE))),
-        ).alias(f"sig_{p}")
-        for p, (a, b) in enumerate(_PERM_AB)
-    ]
-
-
 def minhash_signatures_arrow(df: DataFrame, id_schema: str = "doc_id long") -> DataFrame:
     """(id cols, sig_0..sig_{N_PERM-1}) via ONE vectorized numpy pass over
     the pre-hashed shingle arrays — the round-12 rewrite of the 64
@@ -370,19 +346,18 @@ def minhash_band_keys() -> Column:
     """N_BANDS band keys over the sig_* columns. Each key =
     xxhash64(band idx, its 4 sig values): an 8-byte shuffle key instead of
     a ~40-char concatenated string (collisions are harmless — every
-    candidate is exact-Jaccard verified downstream)."""
-    return F.array(
-        *[
-            F.xxhash64(
-                F.lit(band),
-                *[
-                    F.col(f"sig_{band * ROWS_PER_BAND + r}")
-                    for r in range(ROWS_PER_BAND)
-                ],
-            )
-            for band in range(N_BANDS)
-        ]
+    candidate is exact-Jaccard verified downstream). One ``F.expr``: the
+    same tree built from ``F.col``s costs a py4j round trip per node."""
+    keys = (
+        "xxhash64({}, {})".format(
+            band,
+            ", ".join(
+                f"sig_{band * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
+            ),
+        )
+        for band in range(N_BANDS)
     )
+    return F.expr(f"array({', '.join(keys)})")
 
 
 def minhash_candidate_pairs(
@@ -469,9 +444,9 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str, tau: float = JACCAR
         .repartition(n_part, "doc_id")
         .persist(level)
     )
-    # round 12: signatures via the Arrow kernel (measured 3.8x on the
-    # signature->banding stage at sf0.1 — tools/ab_minhash_kernel.py —
-    # bit-identical to the fold by exceptAll check and unchanged hashes)
+    # signatures via the Arrow kernel (measured 3.8x on the
+    # signature->banding stage at sf0.1, OPTIMIZATION_r12.md; bit-identical
+    # to the fold by exceptAll check and unchanged hashes)
     with_sigs = minhash_signatures_arrow(shingled)
     # None at bench scale (the session default's plan is untouched);
     # corpus-scaled once the sizing rule asks for more than the default.

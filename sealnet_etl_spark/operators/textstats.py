@@ -9,6 +9,8 @@ corpus-level statistics (doc frequencies, histograms) shuffle only
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -169,59 +171,113 @@ def llm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style quality gates: length bounds, language allowlist, repeated
     3-gram ratio, mean word length — each gate reported separately plus the
     conjunction, so downstream can audit why a doc dropped."""
-    return quality_flags(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
+    return QualityGates().flags(docs.select("doc_id", "lang", "text"))
 
 
-def quality_flags(docs: DataFrame) -> DataFrame:
-    """llm_quality_filter's gate computation over ANY (doc_id, lang,
-    text) frame — factored out so the streaming quality monitor scores
-    each micro-batch with the EXACT batch-query expressions (the
-    near-dup family's shared-kernel discipline: batch and streaming
-    twins can never desynchronize)."""
-    w = normalized_words(F.col("text"))
-    feats = (
-        docs.withColumn("__w", w)
-        .filter(F.size("__w") >= 3)
-        .withColumn("__g", word_shingles(F.col("__w"), 3))
-        # word_shingles dedups; repetition needs the full 3-gram list:
-        .withColumn(
-            "__g_all",
-            F.transform(
-                F.sequence(F.lit(0), F.size("__w") - 3),
-                lambda i: F.concat_ws(" ", F.slice(F.col("__w"), i + 1, 3)),
+#: Each gate as SQL over the features n_words, lang, rep3 and awl. Double
+#: literals carry a ``D``: a bare SQL ``1.0`` is a DECIMAL.
+_QUALITY_GATES: dict[str, str] = {
+    "len_ok": f"n_words >= {MIN_WORDS} AND n_words <= {MAX_WORDS}",
+    "lang_ok": "lang IN ({})".format(
+        ", ".join(f"'{lang}'" for lang in QUALITY_LANGS)
+    ),
+    "repetition_ok": f"rep3 <= {MAX_REPETITION}D",
+    "word_len_ok": f"awl >= {MIN_AVG_WLEN}D AND awl <= {MAX_AVG_WLEN}D",
+}
+
+
+class QualityGates:
+    """llm_quality_filter's gates and llm_quality_trend's per-source
+    report as Column expressions, built once. Building a Column costs
+    py4j round trips per node (``F.expr`` of any SQL costs 3), so a
+    caller that scores many frames, such as each micro-batch of
+    str_quality_monitor, builds one QualityGates before its stream
+    starts. Batch and streaming twins share these expressions, so their
+    verdicts can never desynchronize."""
+
+    def __init__(self) -> None:
+        self.words = F.expr(r"split(lower(text), '\\s+')")
+        self.min_words = F.expr("size(__w) >= 3")
+        # every 3-gram, repeats kept (word_shingles would dedup them)
+        self.grams = F.expr(
+            "transform(sequence(0, size(__w) - 3),"
+            " i -> concat_ws(' ', slice(__w, i + 1, 3)))"
+        )
+        self.features = [
+            F.expr("size(__w) AS n_words"),
+            F.expr(
+                "aggregate(transform(__w, x -> length(x)), 0,"
+                " (acc, x) -> acc + x) / CAST(size(__w) AS DOUBLE) AS awl"
             ),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.size("__w").alias("n_words"),
-            (
-                F.aggregate(
-                    F.transform(F.col("__w"), lambda x: F.length(x)),
-                    F.lit(0),
-                    lambda acc, x: acc + x,
+            F.expr(
+                "1.0D - CAST(size(array_distinct(__g_all)) AS DOUBLE)"
+                " / size(__g_all) AS rep3"
+            ),
+        ]
+        self.gates = [
+            F.expr(f"{sql} AS {name}") for name, sql in _QUALITY_GATES.items()
+        ] + [
+            # left-nested, as the Column form ``a & b & c & d`` is (the
+            # SQL parser balances a flat AND chain)
+            F.expr(
+                reduce(
+                    lambda acc, sql: f"({acc}) AND ({sql})",
+                    _QUALITY_GATES.values(),
                 )
-                / F.size("__w").cast("double")
-            ).alias("awl"),
-            (
-                1.0
-                - F.size(F.array_distinct("__g_all")).cast("double")
-                / F.size("__g_all")
-            ).alias("rep3"),
+                + " AS keep"
+            )
+        ]
+        self.report_aggs = [
+            F.expr("count(1) AS n_docs"),
+            F.expr(
+                "CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_pass"
+            ),
+        ] + [
+            F.expr(
+                f"CAST(sum(CASE WHEN NOT {gate} THEN 1 ELSE 0 END) AS BIGINT)"
+                f" AS {name}"
+            )
+            for gate, name in (
+                ("len_ok", "n_len_fail"),
+                ("lang_ok", "n_lang_fail"),
+                ("repetition_ok", "n_rep_fail"),
+                ("word_len_ok", "n_wlen_fail"),
+            )
+        ]
+        self.report_cols = [
+            "source",
+            "n_docs",
+            "n_pass",
+            F.expr("n_pass * 1000000 div n_docs AS pass_rate_micro"),
+            "n_len_fail",
+            "n_lang_fail",
+            "n_rep_fail",
+            "n_wlen_fail",
+        ]
+
+    def flags(self, docs: DataFrame) -> DataFrame:
+        """The gate flags of each (doc_id, lang, text, ...) row with at
+        least 3 words; columns other than ``text`` and ``lang`` ride
+        through. ``__w`` is its own projection, so each row is split
+        once."""
+        return (
+            docs.withColumn("__w", self.words)
+            .filter(self.min_words)
+            .withColumn("__g_all", self.grams)
+            .select("*", *self.features)
+            .select("*", *self.gates)
+            .drop("text", "lang", "__w", "__g_all", "n_words", "awl", "rep3")
         )
-    )
-    len_ok = F.col("n_words").between(MIN_WORDS, MAX_WORDS)
-    lang_ok = F.col("lang").isin(*QUALITY_LANGS)
-    rep_ok = F.col("rep3") <= MAX_REPETITION
-    wlen_ok = F.col("awl").between(MIN_AVG_WLEN, MAX_AVG_WLEN)
-    return feats.select(
-        "doc_id",
-        len_ok.alias("len_ok"),
-        lang_ok.alias("lang_ok"),
-        rep_ok.alias("repetition_ok"),
-        wlen_ok.alias("word_len_ok"),
-        (len_ok & lang_ok & rep_ok & wlen_ok).alias("keep"),
-    )
+
+    def report(self, flags: DataFrame) -> DataFrame:
+        """Per-source gated docs, passes, pass rate in micro-units and
+        each gate's fail count, from ``flags`` with a ``source`` column."""
+        return (
+            flags.groupBy("source")
+            .agg(*self.report_aggs)
+            .select(*self.report_cols)
+        )
 
 
 @query(
@@ -259,31 +315,13 @@ def llm_quality_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_quality_filter reports).
 
     All-integer: counts and an exact floor rate, so the oracle matches
-    bit-for-bit. Scale: reuses llm_quality_filter's one narrow feature
-    pass, joins the (doc_id, source) projection, and aggregates to
-    |sources| rows — one hash shuffle on doc_id for the join (broadcast
-    at graded scale), one map-side-combinable agg."""
-    qf = llm_quality_filter(spark, sf_dir)
-    src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    joined = qf.join(src, "doc_id")
-    fail = lambda c: F.sum(F.when(~F.col(c), 1).otherwise(0)).cast("bigint")  # noqa: E731
-    agged = joined.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).cast("bigint").alias("n_pass"),
-        fail("len_ok").alias("n_len_fail"),
-        fail("lang_ok").alias("n_lang_fail"),
-        fail("repetition_ok").alias("n_rep_fail"),
-        fail("word_len_ok").alias("n_wlen_fail"),
-    )
-    return agged.select(
-        "source",
-        "n_docs",
-        "n_pass",
-        F.expr("n_pass * 1000000 div n_docs").alias("pass_rate_micro"),
-        "n_len_fail",
-        "n_lang_fail",
-        "n_rep_fail",
-        "n_wlen_fail",
+    bit-for-bit. Scale: llm_quality_filter's one narrow feature pass
+    with ``source`` riding through, then one map-side-combinable agg to
+    |sources| rows — one scan of documents, no join."""
+    docs = load_table(spark, sf_dir, "documents")
+    gates = QualityGates()
+    return gates.report(
+        gates.flags(docs.select("doc_id", "source", "lang", "text"))
     )
 
 

@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 
 from ..registry import query
 from .store import corpus_tag, remove, store_path
-from .tables import input_bytes, load_table
+from .tables import input_bytes, load_table, read_parquet
 
 #: Local root of the schema-drift layouts (see ``_drift_base``), inside
 #: the repo. Everything else the engine writes goes through ``store``.
@@ -770,7 +770,7 @@ def src_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     first pass of any incident response, proportional to file COUNT, not
     bytes."""
     def one(name: str, key: str) -> DataFrame:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         return (
             df.select(
                 F.col(key).alias("k"),

@@ -7,12 +7,18 @@ table needing special handling is ``events`` (physical TIMESTAMP(NANOS),
 SURVEY.md §1.3): with the legacy nanos flag its ``ts`` arrives as bigint
 nanoseconds and is truncated to microseconds, matching the DuckDB oracle's
 ``ts::TIMESTAMP`` ns→µs truncation exactly.
+
+The schema of each input table is inferred once per version of that
+table (``read_parquet``): a read without a schema makes Spark run a
+one-task inference job, which used to be paid on every ``load_table``.
 """
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import apply_runtime_confs
 
@@ -38,7 +44,7 @@ BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier"})
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a typed DataFrame."""
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -51,6 +57,54 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # TZ is value-identical and restores unix_micros()/ltz-only fns.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+#: The parquet confs Spark's schema inference reads.
+_SCHEMA_CONFS: tuple[str, ...] = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+#: (qualified path, root mtime, root length, _SCHEMA_CONFS values) ->
+#: the schema Spark inferred for that version of the input. Two racing
+#: first readers infer the same value, so a plain dict is enough.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema once per version
+    of the input. The version is the root's FileStatus modification time
+    and length plus the confs inference reads: a fixed number of py4j
+    calls however many files the input has (no data-file walk). A root
+    without a modification time (0, as on S3A directories) and a missing
+    path are read without a schema, so they infer, or raise, as Spark
+    does. A data file overwritten in place under a directory root
+    changes neither the root's time nor its length, so it keeps the
+    old schema; Spark's writers never do that (they add new files and
+    delete old ones, which moves the directory's time)."""
+    try:
+        fs, root = hadoop_fs(spark, path)
+        status = fs.getFileStatus(root)
+    except Py4JJavaError:
+        return spark.read.parquet(path)
+    mtime = status.getModificationTime()
+    if not mtime:
+        return spark.read.parquet(path)
+    key = (
+        fs.makeQualified(root).toString(),
+        mtime,
+        status.getLen(),
+        tuple(spark.conf.get(conf, None) for conf in _SCHEMA_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 #: (py4j gateway, its ``org.apache.hadoop.fs.Path`` class): py4j resolves

@@ -376,8 +376,8 @@ def str_streaming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("__base", shingle_base_hashes(F.col("shingles")))
             .localCheckpoint()
         )
-        # round 12: signatures via the Arrow kernel (3.8x on the
-        # signature->banding stage — tools/ab_minhash_kernel.py)
+        # signatures via the Arrow kernel (3.8x on the
+        # signature->banding stage, OPTIMIZATION_r12.md)
         keys = minhash_signatures_arrow(shingled).select(
             "doc_id", F.explode(minhash_band_keys()).alias("band_key")
         )
@@ -468,13 +468,20 @@ def str_streaming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(replay)
     )
     drain(stream, process, f"{root}/ckpt")
-    if not exists(spark, results_store):
-        return spark.createDataFrame(
-            [], "doc_prior long, doc_new long, jaccard double"
-        )
-    return spark.read.parquet(results_store).select(
-        "doc_prior", "doc_new", "jaccard"
+    return _read_report(
+        spark, results_store, "doc_prior long, doc_new long, jaccard double"
     )
+
+
+def _read_report(spark: SparkSession, store: str, schema: str) -> DataFrame:
+    """A monitor's report store read with the schema its body wrote, in
+    that schema's column order (a ``chunk`` partition column typed there
+    is parsed as that type), or an empty frame of it when no batch
+    wrote one."""
+    if not exists(spark, store):
+        return spark.createDataFrame([], schema)
+    names = [field.split()[0] for field in schema.split(",")]
+    return spark.read.schema(schema).parquet(store).select(*names)
 
 
 def _eval_postings(
@@ -540,6 +547,14 @@ _STREAM_CONTAM_ORACLE = rf"""
 """
 
 
+#: Both contamination monitors' per-(batch, source) report.
+_CONTAM_REPORT = (
+    "chunk bigint, source string, n_train_docs bigint, "
+    "n_contaminated bigint, contamination_micro bigint, "
+    "n_shared_shingles bigint"
+)
+
+
 @query(
     "str_contamination_monitor",
     survey_id="STR-8/LLM-2/ETL-6",
@@ -598,6 +613,8 @@ def str_contamination_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     _default = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     n_batch = _partitions_for_bytes(-(-doc_bytes // N_DOC_CHUNKS), _default)
 
+    evp = spark.read.parquet(eval_store)
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sized = (
             batch_df.repartition(n_batch, "doc_id")
@@ -617,7 +634,6 @@ def str_contamination_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         members = train.filter(
             F.size(normalized_words(F.col("text"))) >= SHINGLE_K
         ).select("doc_id", "source")
-        evp = spark.read.parquet(eval_store)
         hits = (
             postings.join(F.broadcast(evp), "s")
             .groupBy("doc_id")
@@ -653,21 +669,7 @@ def str_contamination_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(replay)
     )
     drain(stream, process, f"{root}/ckpt")
-    if not exists(spark, results_store):
-        return spark.createDataFrame(
-            [],
-            "chunk bigint, source string, n_train_docs bigint, "
-            "n_contaminated bigint, contamination_micro bigint, "
-            "n_shared_shingles bigint",
-        )
-    return spark.read.parquet(results_store).select(
-        F.col("chunk").cast("bigint").alias("chunk"),
-        "source",
-        "n_train_docs",
-        "n_contaminated",
-        "contamination_micro",
-        "n_shared_shingles",
-    )
+    return _read_report(spark, results_store, _CONTAM_REPORT)
 
 
 def _stream_quality_oracle() -> str:
@@ -708,55 +710,29 @@ def str_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_quality_trend, completing the monitoring trio (near-dup ✓,
     contamination ✓, quality ✓): a source whose pass rate drops in THIS
     batch is caught while the batch is still quarantine-able, and the
-    per-gate fail columns say which gate moved. Gate expressions are the
-    SHARED quality_flags kernel (textstats.py), so the streaming and
-    batch verdicts can never desynchronize.
+    per-gate fail columns say which gate moved. Gate and report
+    expressions are llm_quality_trend's own (``textstats.QualityGates``),
+    so the streaming and batch verdicts can never desynchronize; they are
+    built once per call, so a trigger's driver work does not grow with
+    the expression trees.
 
     Plan per trigger: one narrow feature pass over the batch's own docs
     (O(batch) — no state store, no cross-batch reads; the gates are
-    per-doc by definition) and a map-side-combinable agg to |sources|
-    rows. Results write under ``chunk=<batch_id>`` partitions with
-    per-partition overwrite — the write-ahead-by-batchId idempotency
-    pattern shared by the whole streaming monitoring family."""
-    from ..operators.textstats import quality_flags
+    per-doc by definition) with ``source`` riding through, and a
+    map-side-combinable agg to |sources| rows. Results write under
+    ``chunk=<batch_id>`` partitions with per-partition overwrite — the
+    write-ahead-by-batchId idempotency pattern shared by the whole
+    streaming monitoring family."""
+    from ..operators.textstats import QualityGates
 
     replay = _docs_replay_dir(spark, sf_dir)
     root = store_path(spark, "scratch", sf_dir, "str_quality_monitor")
     remove(spark, root)
     results_store = f"{root}/report"
+    gates = QualityGates()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        flags = quality_flags(batch_df).join(
-            batch_df.select("doc_id", "source"), "doc_id"
-        )
-        fail = lambda c: F.sum(  # noqa: E731
-            F.when(~F.col(c), 1).otherwise(0)
-        ).cast("bigint")
-        report = (
-            flags.groupBy("source")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.when(F.col("keep"), 1).otherwise(0))
-                .cast("bigint")
-                .alias("n_pass"),
-                fail("len_ok").alias("n_len_fail"),
-                fail("lang_ok").alias("n_lang_fail"),
-                fail("repetition_ok").alias("n_rep_fail"),
-                fail("word_len_ok").alias("n_wlen_fail"),
-            )
-            .select(
-                "source",
-                "n_docs",
-                "n_pass",
-                F.expr("n_pass * 1000000 div n_docs").alias(
-                    "pass_rate_micro"
-                ),
-                "n_len_fail",
-                "n_lang_fail",
-                "n_rep_fail",
-                "n_wlen_fail",
-            )
-        )
+        report = gates.report(gates.flags(batch_df))
         report.coalesce(1).write.mode("overwrite").parquet(
             f"{results_store}/chunk={batch_id}"
         )
@@ -769,24 +745,14 @@ def str_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(replay)
     )
     drain(stream, process, f"{root}/ckpt")
-    if not exists(spark, results_store):
-        return spark.createDataFrame(
-            [],
-            "chunk bigint, source string, n_docs bigint, n_pass bigint, "
-            "pass_rate_micro bigint, n_len_fail bigint, n_lang_fail "
-            "bigint, n_rep_fail bigint, n_wlen_fail bigint",
-        )
-    return spark.read.parquet(results_store).select(
-        F.col("chunk").cast("bigint").alias("chunk"),
-        "source",
-        "n_docs",
-        "n_pass",
-        "pass_rate_micro",
-        "n_len_fail",
-        "n_lang_fail",
-        "n_rep_fail",
-        "n_wlen_fail",
+    return _read_report(
+        spark,
+        results_store,
+        "chunk bigint, source string, n_docs bigint, n_pass bigint, "
+        "pass_rate_micro bigint, n_len_fail bigint, n_lang_fail bigint, "
+        "n_rep_fail bigint, n_wlen_fail bigint",
     )
+
 
 # ---------------------------------------------------------------------------
 # Round 10: fixed-size eval probe + mixture-conformance monitor
@@ -881,6 +847,8 @@ def str_contamination_monitor_fixed(
     _default = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     n_batch = _partitions_for_bytes(-(-doc_bytes // N_DOC_CHUNKS), _default)
 
+    evp = spark.read.parquet(eval_store)
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sized = (
             batch_df.repartition(n_batch, "doc_id")
@@ -896,7 +864,6 @@ def str_contamination_monitor_fixed(
         members = train.filter(
             F.size(normalized_words(F.col("text"))) >= SHINGLE_K
         ).select("doc_id", "source")
-        evp = spark.read.parquet(eval_store)
         hits = (
             postings.join(F.broadcast(evp), "s")
             .groupBy("doc_id")
@@ -932,21 +899,7 @@ def str_contamination_monitor_fixed(
         .parquet(replay)
     )
     drain(stream, process, f"{root}/ckpt")
-    if not exists(spark, results_store):
-        return spark.createDataFrame(
-            [],
-            "chunk bigint, source string, n_train_docs bigint, "
-            "n_contaminated bigint, contamination_micro bigint, "
-            "n_shared_shingles bigint",
-        )
-    return spark.read.parquet(results_store).select(
-        F.col("chunk").cast("bigint").alias("chunk"),
-        "source",
-        "n_train_docs",
-        "n_contaminated",
-        "contamination_micro",
-        "n_shared_shingles",
-    )
+    return _read_report(spark, results_store, _CONTAM_REPORT)
 
 
 _MIXTURE_MONITOR_ORACLE = rf"""
@@ -1059,19 +1012,11 @@ def str_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(replay)
     )
     drain(stream, process, f"{root}/ckpt")
-    if not exists(spark, results_store):
-        return spark.createDataFrame(
-            [],
-            "chunk bigint, source string, n_docs bigint, share_micro "
-            "bigint, expected_micro bigint, dev_micro bigint",
-        )
-    return spark.read.parquet(results_store).select(
-        F.col("chunk").cast("bigint").alias("chunk"),
-        "source",
-        "n_docs",
-        "share_micro",
-        "expected_micro",
-        "dev_micro",
+    return _read_report(
+        spark,
+        results_store,
+        "chunk bigint, source string, n_docs bigint, share_micro bigint, "
+        "expected_micro bigint, dev_micro bigint",
     )
 
 
@@ -1233,15 +1178,10 @@ def str_embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(replay)
     )
     drain(stream, process, f"{root}/ckpt")
-    if not exists(spark, results_store):
-        return spark.createDataFrame(
-            [], "chunk bigint, label int, n_vecs bigint, centroid_cos double"
-        )
-    return spark.read.parquet(results_store).select(
-        F.col("chunk").cast("bigint").alias("chunk"),
-        "label",
-        "n_vecs",
-        "centroid_cos",
+    return _read_report(
+        spark,
+        results_store,
+        "chunk bigint, label int, n_vecs bigint, centroid_cos double",
     )
 
 
@@ -1358,17 +1298,10 @@ def str_ivf_ingest_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(replay)
     )
     drain(stream, process, f"{root}/ckpt")
-    if not exists(spark, results_store):
-        return spark.createDataFrame(
-            [],
-            "chunk bigint, cell_id bigint, n_assigned bigint, "
-            "share_micro bigint",
-        )
-    return spark.read.parquet(results_store).select(
-        F.col("chunk").cast("bigint").alias("chunk"),
-        "cell_id",
-        "n_assigned",
-        "share_micro",
+    return _read_report(
+        spark,
+        results_store,
+        "chunk bigint, cell_id bigint, n_assigned bigint, share_micro bigint",
     )
 
 
@@ -1660,14 +1593,8 @@ def str_ivf_rebalance_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drain(stream, process, f"{root}/ckpt")
 
-    empty = (
-        "chunk bigint, cell_id bigint, n_batch bigint, cum_n bigint, "
-        "split_candidate bigint"
-    )
-    if not exists(spark, results_store):
-        return spark.createDataFrame([], empty)
-    counts = spark.read.parquet(results_store).select(
-        F.col("chunk").cast("bigint").alias("chunk"), "cell_id", "n"
+    counts = _read_report(
+        spark, results_store, "chunk bigint, cell_id bigint, n bigint"
     )
     # plan-constant frame from here on: |chunks| x |cells| rows (the
     # explicit broadcast keeps this a bounded BNLJ, never a

@@ -411,7 +411,9 @@ def str_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_df.write.mode("append").parquet(sink)
 
     drain(stream, write_batch, f"{root}/ckpt")
-    return spark.read.parquet(sink)
+    return spark.read.schema(
+        "event_id bigint, user_id bigint, event_type string"
+    ).parquet(sink)
 
 
 @query(

@@ -107,11 +107,12 @@ def test_graded_corpus_band_occupancy_below_cap(spark):
     from sealnet_etl_spark.operators.dedup import (
         SHINGLE_K,
         minhash_band_keys,
-        minhash_signature_cols,
         normalized_words,
         shingle_base_hashes,
         word_shingles,
     )
+
+    from .minhash_reference import minhash_signature_cols
 
     for sf in ("sf0.001", "sf0.01", "sf0.1"):
         docs = spark.read.parquet(f"/root/testdata/{sf}/documents.parquet")

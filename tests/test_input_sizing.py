@@ -1,18 +1,29 @@
 """The input sizer and the fan-out gate (sources.input_bytes /
 sources.fan_out_small_input): sizing through the path's Hadoop FileSystem
 is URI-safe, the gate reads maxPartitionBytes the way the file scan does,
-both gate arms give identical rows, and the decision lives in one module."""
+both gate arms give identical rows, and the decision lives in one module.
+The schema memo of load_table: a table's schema is inferred once per
+version of it, and a new version, new inference confs or a missing table
+behave as an uncached read does."""
 
 from __future__ import annotations
 
 import os
 import re
+import shutil
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 
 from sealnet_etl_spark.registry import all_queries
-from sealnet_etl_spark.sources.tables import fan_out_small_input, input_bytes
+from sealnet_etl_spark.sources.tables import (
+    fan_out_small_input,
+    input_bytes,
+    load_table,
+)
 
 from .conftest import SF_DIR
 
@@ -138,3 +149,65 @@ def test_input_sizing_lives_in_one_module():
                 line = text.count("\n", 0, m.start()) + 1
                 offenders.append(f"{rel}:{line}")
     assert not offenders, offenders
+
+
+def _job_ids(spark) -> set[int]:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+@pytest.mark.parametrize("table", ["documents", "events"])
+def test_second_load_table_starts_no_job(spark, tmp_path, table):
+    """Schema inference is a Spark job; a table read again in the same
+    version must not pay it, and ``events`` still gets its µs ``ts``."""
+    shutil.copy(f"{SF_DIR}/{table}.parquet", tmp_path)
+    first = load_table(spark, str(tmp_path), table)
+    before = _job_ids(spark)
+    second = load_table(spark, str(tmp_path), table)
+    assert _job_ids(spark) == before
+    assert second.dtypes == first.dtypes
+    if table == "events":
+        assert dict(second.dtypes)["ts"] == "timestamp"
+
+
+@pytest.mark.parametrize("uri", [False, True], ids=["plain", "file_uri"])
+def test_rewritten_table_shows_its_new_column(spark, tmp_path, uri):
+    path = tmp_path / "region.parquet"
+    shutil.copy(f"{SF_DIR}/region.parquet", path)
+    sf_dir = f"file://{tmp_path}" if uri else str(tmp_path)
+    columns = load_table(spark, sf_dir, "region").columns
+
+    table = pq.read_table(path)
+    extra = pa.array(range(table.num_rows), pa.int64())
+    pq.write_table(table.append_column("r_extra", extra), path)
+    rewritten = load_table(spark, sf_dir, "region")
+    assert rewritten.columns == columns + ["r_extra"]
+    assert sorted(r.r_extra for r in rewritten.collect()) == list(
+        range(table.num_rows)
+    )
+
+
+def test_binary_as_string_conf_gets_its_own_schema(spark, tmp_path):
+    pq.write_table(
+        pa.table({"k": [1, 2], "b": pa.array([b"x", b"y"], pa.binary())}),
+        tmp_path / "blobs.parquet",
+    )
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key, None)
+    types = []
+    try:
+        for value in ("false", "true"):
+            spark.conf.set(key, value)
+            df = load_table(spark, str(tmp_path), "blobs")
+            types.append(dict(df.dtypes)["b"])
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    assert types == ["binary", "string"]
+
+
+def test_missing_table_raises_path_not_found(spark, tmp_path):
+    with pytest.raises(AnalysisException) as err:
+        load_table(spark, str(tmp_path), "documents")
+    assert err.value.getCondition() == "PATH_NOT_FOUND"

@@ -31,10 +31,11 @@ def test_minhash_arrow_kernel_matches_catalyst_fold(spark):
     from sealnet_etl_spark.operators.dedup import (
         SHINGLE_K,
         _docs_with_shingles,
-        minhash_signature_cols,
         minhash_signatures_arrow,
         shingle_base_hashes,
     )
+
+    from .minhash_reference import minhash_signature_cols
 
     shingled = (
         _docs_with_shingles(spark, SF, SHINGLE_K)
