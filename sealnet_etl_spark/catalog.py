@@ -29,6 +29,7 @@ from .operators import (  # noqa: F401
     multimodal,
     projections,
     similarity,
+    ivf,  # after similarity: registration order breaks grade-rank ties
     sorts_sets,
     textstats,
     trainprep,

@@ -1186,7 +1186,7 @@ def str_embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_monitor_oracle() -> str:
-    from ..operators.similarity import IVF_REFRESH_CELLS
+    from ..operators.ivf import IVF_REFRESH_CELLS
 
     return f"""
     WITH ei AS (
@@ -1252,7 +1252,7 @@ def str_ivf_ingest_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent by semantics; chunk=<batch_id> per-partition overwrite
     idempotency. All-integer assignment and exact floor shares —
     bit-comparable to the brute-force oracle."""
-    from ..operators.similarity import (
+    from ..operators.ivf import (
         _ivf_assign_cells,
         _ivf_frozen_seeds,
         _ivf_int_vectors,
@@ -1306,7 +1306,7 @@ def str_ivf_ingest_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_append_oracle() -> str:
-    from ..operators.similarity import IVF_REFRESH_CELLS
+    from ..operators.ivf import IVF_REFRESH_CELLS
 
     return f"""
     WITH ei AS (
@@ -1381,7 +1381,7 @@ def str_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the store is the standard IVF posting layout: partitioned by
     arrival chunk, 16 bytes/vector, mergeable offline into cell-major
     order without recomputing a single assignment."""
-    from ..operators.similarity import (
+    from ..operators.ivf import (
         _ivf_assign_cells,
         _ivf_frozen_seeds,
         _ivf_int_vectors,
@@ -1465,7 +1465,7 @@ def str_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_rebalance_trigger_oracle() -> str:
-    from ..operators.similarity import IVF_REFRESH_CELLS, IVF_SPLIT_TOP
+    from ..operators.ivf import IVF_REFRESH_CELLS, IVF_SPLIT_TOP
 
     return f"""
     WITH ei AS (
@@ -1552,7 +1552,7 @@ def str_ivf_rebalance_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     |cells|-row count frame lands in the store per trigger. The
     cumulative re-rank runs over the ≤ |chunks|x|cells| store rows — a
     plan-constant frame, never corpus-sized, at any SF."""
-    from ..operators.similarity import (
+    from ..operators.ivf import (
         IVF_SPLIT_TOP,
         _ivf_assign_cells,
         _ivf_frozen_seeds,
@@ -1639,7 +1639,7 @@ def str_ivf_rebalance_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_compact_oracle() -> str:
-    from ..operators.similarity import IVF_REFRESH_CELLS
+    from ..operators.ivf import IVF_REFRESH_CELLS
 
     return f"""
     WITH ei AS (
@@ -1717,7 +1717,7 @@ def llm_ivf_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nightly posting-merge every IVF serving tier runs; the
     file-per-cell invariant is what keeps probe-side open() counts at
     O(nprobe), not O(chunks)."""
-    from ..operators.similarity import (
+    from ..operators.ivf import (
         _ivf_assign_cells,
         _ivf_frozen_seeds,
         _ivf_int_vectors,
@@ -1817,7 +1817,7 @@ IVF_DELETE_HEX_BOUND = "2"
 
 
 def _ivf_delete_oracle() -> str:
-    from ..operators.similarity import IVF_REFRESH_CELLS
+    from ..operators.ivf import IVF_REFRESH_CELLS
 
     return f"""
     WITH ei AS (
@@ -1895,7 +1895,7 @@ def str_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_ivf_store_compact shuffle with the anti-join fused before the
     exchange — deleted rows never travel. Between compactions, serving
     pays one anti-join; after, nothing."""
-    from ..operators.similarity import (
+    from ..operators.ivf import (
         _ivf_assign_cells,
         _ivf_frozen_seeds,
         _ivf_int_vectors,

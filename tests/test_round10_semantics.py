@@ -104,10 +104,8 @@ def test_ivf_refresh_partitions_both_halves_and_is_memo_stable(
     — served by the persisted index instead of a rebuild — must return
     identical rows (the incremental path cannot drift from the build
     path)."""
-    from sealnet_etl_spark.operators.similarity import (
-        IVF_REFRESH_CELLS,
-        load_embeddings,
-    )
+    from sealnet_etl_spark.operators.ivf import IVF_REFRESH_CELLS
+    from sealnet_etl_spark.operators.similarity import load_embeddings
 
     rows = queries["llm_ivf_index_refresh"](spark, SF).collect()
     emb = load_embeddings(spark, SF)
@@ -202,7 +200,7 @@ def test_ivf_cell_probe_serves_exactly_the_probed_cell(spark, queries):
     cos_sim valid."""
     from collections import defaultdict
 
-    from sealnet_etl_spark.operators.similarity import IVF_PROBE_K
+    from sealnet_etl_spark.operators.ivf import IVF_PROBE_K
 
     rows = queries["llm_ivf_cell_probe"](spark, SF).collect()
     refresh = {

@@ -84,10 +84,7 @@ def test_ivf_nprobe_probe_dominates_single_cell(spark, queries):
     (c) rank-1 cells reproduce the nprobe=1 probe's routed cell."""
     from collections import defaultdict
 
-    from sealnet_etl_spark.operators.similarity import (
-        IVF_NPROBE,
-        IVF_PROBE_K,
-    )
+    from sealnet_etl_spark.operators.ivf import IVF_NPROBE, IVF_PROBE_K
 
     multi = queries["llm_ivf_cell_probe_nprobe"](spark, SF).collect()
     single = queries["llm_ivf_cell_probe"](spark, SF).collect()
@@ -130,10 +127,7 @@ def test_ivf_rebalance_conserves_and_splits(spark, queries):
     view), and untouched cells carry their pre-rebalance counts."""
     from collections import defaultdict
 
-    from sealnet_etl_spark.operators.similarity import (
-        IVF_SPLIT_TOP,
-        IVF_SPLIT_WAYS,
-    )
+    from sealnet_etl_spark.operators.ivf import IVF_SPLIT_TOP, IVF_SPLIT_WAYS
 
     rows = queries["llm_ivf_cell_rebalance"](spark, SF).collect()
     before = {
@@ -175,7 +169,7 @@ def test_rebalance_trigger_final_chunk_matches_batch_split(spark, queries):
     are flagged per chunk."""
     from collections import defaultdict
 
-    from sealnet_etl_spark.operators.similarity import IVF_SPLIT_TOP
+    from sealnet_etl_spark.operators.ivf import IVF_SPLIT_TOP
 
     rows = queries["str_ivf_rebalance_trigger"](spark, SF).collect()
     by_chunk = defaultdict(dict)
@@ -210,7 +204,7 @@ def test_pq_adc_topk_invariants(spark, queries):
     queries x 250 indexed it must beat the random baseline of ~0)."""
     from collections import defaultdict
 
-    from sealnet_etl_spark.operators.similarity import IVF_PROBE_K
+    from sealnet_etl_spark.operators.ivf import IVF_PROBE_K
 
     rows = queries["llm_pq_adc_topk"](spark, SF).collect()
     per_q = defaultdict(list)
@@ -240,7 +234,7 @@ def test_ivfpq_capstone_consistent_with_parts(spark, queries):
     exactly hash-graded against its DuckDB oracle.)"""
     from collections import defaultdict
 
-    from sealnet_etl_spark.operators.similarity import IVF_PROBE_K
+    from sealnet_etl_spark.operators.ivf import IVF_PROBE_K
 
     capstone = queries["llm_ivfpq_graded_topk"](spark, SF).collect()
     nprobe_cells = defaultdict(set)
@@ -256,7 +250,7 @@ def test_ivfpq_capstone_consistent_with_parts(spark, queries):
         assert -1.0 <= r.cos_sim <= 1.0
         per_q[r.query_id].append(r)
     assert per_q
-    from sealnet_etl_spark.operators.similarity import IVF_NPROBE
+    from sealnet_etl_spark.operators.ivf import IVF_NPROBE
 
     for qid, rs in per_q.items():
         assert len(rs) == IVF_PROBE_K

@@ -129,10 +129,7 @@ def test_probe_rebalanced_routes_over_post_split_quantizer(spark, queries):
     conserves the corpus (sum of n_members == |corpus|, already pinned
     for the report — here re-checked through the serve path's members
     frame)."""
-    from sealnet_etl_spark.operators.similarity import (
-        IVF_PROBE_K,
-        IVF_PROBE_Q,
-    )
+    from sealnet_etl_spark.operators.ivf import IVF_PROBE_K, IVF_PROBE_Q
 
     probe = queries["llm_ivf_probe_rebalanced"](spark, SF).collect()
     report = queries["llm_ivf_cell_rebalance"](spark, SF).collect()

@@ -28,7 +28,7 @@ def test_ivf_assign_kernel_matches_catalyst(spark):
     gate for every IVF-family consumer's unchanged DuckDB hash. Checked
     on the full sf0.01 corpus, both keep_vec arms, both directions of
     exceptAll (the minhash_signatures_arrow precedent)."""
-    from sealnet_etl_spark.operators.similarity import (
+    from sealnet_etl_spark.operators.ivf import (
         _ivf_assign_cells,
         _ivf_assign_cells_catalyst,
         _ivf_frozen_seeds,
@@ -58,7 +58,7 @@ def test_ivf_assign_kernel_matches_catalyst(spark):
 def test_ivf_assign_kernel_cc_is_exact_sq_norm(spark):
     """keep_vec additionally emits cc = Σa² off the kernel (one einsum
     per batch). Must equal the Catalyst fold for every vector."""
-    from sealnet_etl_spark.operators.similarity import (
+    from sealnet_etl_spark.operators.ivf import (
         _ivf_assign_cells,
         _ivf_frozen_seeds,
         _ivf_int_vectors,
@@ -84,11 +84,11 @@ def test_ivf_assign_kernel_exact_tie_breaks_to_smallest_cell(spark):
     band + exact Python-int re-decide path is exercised, and assert the
     max_by tie rule: smallest cell_id wins. Cross-checked against the
     Catalyst reference on the same inputs."""
-    from sealnet_etl_spark.operators.similarity import (
+    from sealnet_etl_spark.operators.ivf import (
         _ivf_assign_cells,
         _ivf_assign_cells_catalyst,
-        EMBED_DIM,
     )
+    from sealnet_etl_spark.operators.similarity import EMBED_DIM
 
     vec_a = [7] * EMBED_DIM
     vec_b = [(-3) ** (i % 2) for i in range(EMBED_DIM)]  # mixed signs
@@ -127,7 +127,7 @@ def test_int_dot_fold_matches_decimal_fold(spark):
     """The bigint dot/norm folds (_int_dot/_int_sq_norm) must equal the
     round-12 decimal(38,0) folds on the real corpus — the no-overflow
     bound (|a_i| ≤ 1e6 ⇒ 64-term prefix sums ≤ 6.4e13) made measurable."""
-    from sealnet_etl_spark.operators.similarity import (
+    from sealnet_etl_spark.operators.ivf import (
         _int_dot,
         _int_sq_norm,
         _ivf_int_vectors,

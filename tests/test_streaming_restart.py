@@ -328,7 +328,7 @@ def test_accumulated_serve_matches_store(spark):
     produce the identical top-k frame — proving the streamed vectors
     are first-class serving candidates and the store holds exactly
     what the serve assumes."""
-    from sealnet_etl_spark.operators.similarity import (
+    from sealnet_etl_spark.operators.ivf import (
         _ivf_frozen_seeds,
         _ivf_int_vectors,
         _ivf_serve_topk,

@@ -31,10 +31,7 @@ def exact_topk(spark, sf_dir: str, k: int):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from sealnet_etl_spark.operators.similarity import (
-        IVF_PROBE_Q,
-        _ivf_int_vectors,
-    )
+    from sealnet_etl_spark.operators.ivf import IVF_PROBE_Q, _ivf_int_vectors
 
     ei = _ivf_int_vectors(spark, sf_dir)
     members = ei.filter(F.col("snap") == 0).select(
@@ -93,7 +90,7 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=None)
     args = ap.parse_args()
 
-    from sealnet_etl_spark.operators.similarity import (
+    from sealnet_etl_spark.operators.ivf import (
         IVF_PROBE_K,
         IVF_REFRESH_CELLS,
         _ivf_probe_frame,
