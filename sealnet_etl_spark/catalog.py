@@ -42,101 +42,14 @@ from .plans import flagship  # noqa: F401
 
 from . import registry as _registry
 
-#: Queries whose physical plan was rewritten since their last driver
-#: grade, re-certified first (the r6 simhash / r8 margin-mining
-#: precedent — VERDICT r9 #1). The r8 trio (llm_margin_mining,
-#: llm_hard_negatives, ag_cohens_kappa) re-certified hash-green in r9
-#: and dropped. Round-10 tier 0:
-#: - the five consumers of the r9 minhash fold-kernel rewrite
-#:   (minhash_signature_cols transform+array_min → aggregate fold, plus
-#:   the always-present repartition(n, doc_id) exchange and the
-#:   size-gated persist-level switch) — their last grades (r1/r1/r?/r4/
-#:   r8) all predate the kernel: llm_minhash_near_dup_pairs,
-#:   llm_dedup_clusters, llm_dedup_rate_trend, llm_incremental_near_dup,
-#:   str_streaming_near_dup;
-#: - the four consumers of the r9 session-memoized token-count frame
-#:   (inlined regex counts → shared materialized scan):
-#:   llm_tokenizer_fertility, llm_token_gini, llm_pack_bins,
-#:   llm_pack_efficiency;
-#: - llm_effective_tokens: round-10 retention_micro rewrite (int64
-#:   scale-up → decimal(38,0), the fertility_micro wraparound guard) —
-#:   values at graded SFs are argued identical, but the projection
-#:   expression changed after its r9 grade.
-#: - str_contamination_monitor: round-10 batch-stage partitioning (the
-#:   near-dup's corpus-sized rule, gated past the session default so the
-#:   graded-scale plan is byte-identical) landed after its r9 grade.
-#: - llm_shard_skew_report: round-10 skew_micro rewrite (int64 →
-#:   decimal(38,0) scale-up; max_tokens·n·1e6 wraps at the 100 TB token
-#:   count) after its last grade. llm_pack_efficiency's twin
-#:   padding_rate guard changed its projection too — already tier-0
-#:   via the token-frame rewrite.
-#: - llm_decontaminate / llm_contamination_report: round-10 Arrow
-#:   shingle_postings kernel (the interpreted-HOF array build + explode
-#:   was ~97% of the probe wall; postings verified set-identical,
-#:   report 6.4 → 1.2 s at sf0.1) — the plan changed at every scale, so
-#:   both take tier-0 slots (the compression_ratio r6 precedent).
-#: ROUND-11 tier 0 (all 14 round-10 entries re-certified green in
-#: CORRECTNESS_r10 and dropped):
-#: - the five shingle_postings-kernel consumers again — the ADVICE-r10
-#:   re.ASCII tokenizer fix changed the kernel's split semantics (a
-#:   values-identical no-op on the ASCII fixtures, argued + pinned by
-#:   test_shingle_kernel_unicode_whitespace_parity, but the kernel
-#:   bytes changed after their r10 grades): llm_decontaminate,
-#:   llm_contamination_report, str_contamination_monitor,
-#:   str_contamination_monitor_fixed;
-#: - str_streaming_near_dup: the sf100 scan-conf overrides moved from
-#:   set/restore on the shared session to an isolated newSession()
-#:   (ADVICE r10) — below the size gate the plan is byte-identical,
-#:   above it only the owning session differs, but the code path that
-#:   builds the stream changed.
-#: - the three IVF-family queries whose frozen-seed materialization
-#:   moved into the shared _ivf_frozen_seeds helper (code motion; the
-#:   collected seed rows and every downstream plan are argued
-#:   identical, but touched code regrades first — the r10 template):
-#:   llm_ivf_index_refresh, llm_ivf_cell_probe, str_ivf_ingest_monitor.
-#: ROUND-12 tier 0 (all 8 round-11 entries re-certified green in
-#: CORRECTNESS_r11 and dropped):
-#: - llm_ivfpq_graded_topk: the residual-encoding rewrite (VERDICT r11
-#:   #4) changed the capstone's plan at every scale — members encode
-#:   residuals to their cell seed, codebooks sample residual space,
-#:   query tables are per-probed-cell. Values verified hash-green
-#:   locally at sf0.01/sf0.001; regrades first per the r10 template.
-#: - str_streaming_near_dup: apply_runtime_confs() now runs on the
-#:   isolated stream session before the scan overrides (ADVICE r11),
-#:   AND the per-batch signature stage now runs through the round-12
-#:   minhash Arrow kernel.
-#: - the minhash-signature Arrow kernel (round-12 optimization,
-#:   OPTIMIZATION_r12.md) replaced the 64 per-permutation aggregate
-#:   folds with one numpy pass — bit-identical minima (pinned by
-#:   test_minhash_arrow_kernel_matches_catalyst_fold), but the plan changed
-#:   at every scale for every consumer of minhash_near_dup_pairs:
-#:   llm_minhash_near_dup_pairs, llm_dedup_clusters,
-#:   llm_dedup_cluster_size_histogram, llm_dedup_rate_trend,
-#:   llm_incremental_near_dup, llm_dedup_degree_report,
-#:   llm_cross_source_dup_matrix, llm_triangle_count, llm_pagerank,
-#:   llm_cross_source_overlap, llm_dedup_audit_report,
-#:   llm_dedup_threshold_sweep, llm_quality_dedup_crosstab,
-#:   llm_effective_tokens.
-#: - the IVF keep_vec argmax (carry `a` through the assignment
-#:   aggregate, deleting the vec_id re-join) + assignment lineage
-#:   truncation changed the probe/rebalance/serve family's plans:
-#:   llm_ivf_cell_probe, llm_ivf_cell_probe_nprobe,
-#:   llm_ivf_cell_rebalance, llm_ivf_serve_accumulated (keep_vec=False
-#:   callers — refresh, ingest monitor, append/delete/compact/trigger —
-#:   kept byte-identical assignment plans).
-#: - the positioned-shingle mapInPandas kernels replaced the
-#:   interpreted transform+slice stages of llm_substring_dedup_spans,
-#:   llm_substring_dedup_apply, llm_winnowing_fingerprints; and
-#:   llm_boilerplate_ngrams now reuses the shingle_postings kernel.
-#: ROUND-13 tier 0 (every round-12 entry re-certified green in
-#: CORRECTNESS_r12 and dropped): the round-13 assignment Arrow kernel
-#: (_ivf_assign_cells — map-only exact int64 kernel replacing the
-#: broadcast fanout + decimal folds + max_by exchange, keep_vec
-#: additionally emitting the member norm cc) plus the bigint dot/norm
-#: folds changed the plan of EVERY _ivf_assign_cells / probe-family
-#: consumer; llm_pq_adc_topk's exact-refine norm folds moved above its
-#: topk join. All pinned by tests/test_round13_semantics.py and
-#: re-verified hash-green at sf0.01 before commit.
+#: Queries whose physical plan changed since their last driver grade,
+#: re-certified first (tier 0). Correctness is enforced locally by the
+#: strict mirror; this only orders the driver's bounded window.
+#: - the frozen-quantizer IVF family (operators/ivf.py and the streaming
+#:   legs): one query batch, one router, one member top-k and one PQ
+#:   encode/refine replace the per-query copies, and seeds reach the
+#:   assignment kernel as driver-local rows, so every member's plan
+#:   changed; outputs and oracle results are unchanged.
 _REGRADE_FIRST: tuple[str, ...] = (
     "llm_ivf_cell_probe_nprobe",
     "llm_ivf_cell_probe",
@@ -151,7 +64,7 @@ _REGRADE_FIRST: tuple[str, ...] = (
     "str_ivf_index_delete",
     "str_ivf_ingest_monitor",
     "str_ivf_rebalance_trigger",
-    # round-13 LSH probe-side fan-out gate (rows-only class; the plan
+    # the LSH probe-side fan-out gate (rows-only class; the plan
     # changed, so it regrades first all the same)
     "llm_lsh_ann_topk",
     # report stores read back with their written schema (no chunk cast);

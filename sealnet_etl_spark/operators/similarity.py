@@ -9,7 +9,7 @@ Two paths, as a 100 TB engine must have:
   survives n in the billions. Recall vs. the exact path is asserted in
   tests (there is no exact oracle for an approximate operator).
 
-Execution architecture (round 2): all pairwise vector math runs as BLAS
+Execution architecture: all pairwise vector math runs as BLAS
 matmuls / einsums inside Arrow-batched Python workers, against corpus
 TILES written to the Spark warehouse dir (shared storage on a cluster) —
 the driver never holds vector data, joins and shuffles carry only 8-byte
@@ -20,6 +20,10 @@ for ad-hoc column expressions — measured ~50× slower than the batched
 BLAS path for pairwise scoring, so no graded operator uses them in its
 hot loop. An IVF variant (k-means coarse quantizer → probe nearest
 cells) complements LSH (no training pass needed).
+
+The exactly-graded frozen-quantizer IVF family (index refresh, cell
+probes, rebalance, accumulated serve, PQ / IVF-PQ top-k) lives in
+operators/ivf.py.
 """
 
 from __future__ import annotations
@@ -1071,6 +1075,57 @@ N_CELLS = 16
 N_PROBE = 4
 
 
+def _coarse_cells(spark: SparkSession, emb: DataFrame):
+    """The rows-only IVF coarse quantizer: one k-means-lite step computed
+    in Spark (cells seeded from a deterministic hash partition of the
+    ids, then replaced by their member centroid — one shuffle; the
+    |cells|x64 centroid table broadcasts after the collect). Returns
+    ``cells(n_out, out)``: the (out, cell) rows of each vector's n_out
+    nearest cells by cosine — bare ids, vectors never leave the batch."""
+    import numpy as np
+    import pandas as pd
+
+    seeded = emb.withColumn("cell", F.pmod(F.xxhash64("vec_id"), F.lit(N_CELLS)))
+    cent = np.zeros((N_CELLS, EMBED_DIM))
+    for r in (
+        seeded.select("cell", F.posexplode("embedding").alias("dim", "v"))
+        .groupBy("cell", "dim")
+        .agg(F.avg(F.col("v").cast("double")).alias("c"))
+        .collect()
+    ):
+        cent[r.cell, r.dim] = r.c
+    cent_norm = np.sqrt((cent * cent).sum(axis=1))
+    cent_norm[cent_norm == 0.0] = 1.0
+    bc = spark.sparkContext.broadcast((cent, cent_norm))
+
+    def assign(batches, n_out: int, out: str):
+        c, cn = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                yield pd.DataFrame({out: [], "cell": []}).astype(
+                    {out: "int64", "cell": "int64"}
+                )
+                continue
+            q = np.array(list(pdf["embedding"]), dtype=np.float64)
+            qn = np.sqrt((q * q).sum(axis=1))
+            qn[qn == 0.0] = 1.0
+            sim = q @ c.T / (qn[:, None] * cn[None, :])
+            cells = np.argsort(-sim, axis=1, kind="stable")[:, :n_out]
+            yield pd.DataFrame(
+                {
+                    out: pdf["vec_id"].to_numpy().repeat(n_out),
+                    "cell": cells.reshape(-1),
+                }
+            )
+
+    def cells(n_out: int, out: str) -> DataFrame:
+        return emb.mapInPandas(
+            lambda it: assign(it, n_out, out), f"{out} bigint, cell bigint"
+        )
+
+    return cells
+
+
 @query("llm_ivf_ann_topk", survey_id="LLM-5", oracle=None)
 def llm_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: a trained coarse quantizer partitions the corpus into
@@ -1099,60 +1154,12 @@ def llm_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow shuffle-free pass, and per-cell candidate lists are the
     bucketed layout ANN serving reads.
     """
-    import numpy as np
-    import pandas as pd
-
     emb = load_embeddings(spark, sf_dir).select("vec_id", "embedding")
-
-    # one k-means-lite refinement step, all in Spark: seed cell = id hash,
-    # centroid = mean of members (posexplode partial agg, |cells|x64 rows)
-    seeded = emb.withColumn("cell", F.pmod(F.xxhash64("vec_id"), F.lit(N_CELLS)))
-    centroids_df = (
-        seeded.select("cell", F.posexplode("embedding").alias("dim", "v"))
-        .groupBy("cell", "dim")
-        .agg(F.avg(F.col("v").cast("double")).alias("c"))
-    )
-    cent = np.zeros((N_CELLS, EMBED_DIM))
-    for r in centroids_df.collect():
-        cent[r.cell, r.dim] = r.c
-    cent_norm = np.sqrt((cent * cent).sum(axis=1))
-    cent_norm[cent_norm == 0.0] = 1.0
-    bc = spark.sparkContext.broadcast((cent, cent_norm))
-
-    def assign(batches, n_out: int, out: str):
-        # emits bare (id, cell) rows — vectors never leave the batch
-        # (round 2: the cell join previously carried embeddings and scored
-        # candidates with per-pair Catalyst folds; candidates are now id
-        # pairs scored worker-side against the corpus tile, the same path
-        # as llm_lsh_ann_topk)
-        c, cn = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame({out: [], "cell": []}).astype(
-                    {out: "int64", "cell": "int64"}
-                )
-                continue
-            q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            qn = np.sqrt((q * q).sum(axis=1))
-            qn[qn == 0.0] = 1.0
-            sim = q @ c.T / (qn[:, None] * cn[None, :])
-            cells = np.argsort(-sim, axis=1, kind="stable")[:, :n_out]
-            yield pd.DataFrame(
-                {
-                    out: pdf["vec_id"].to_numpy().repeat(n_out),
-                    "cell": cells.reshape(-1),
-                }
-            )
-
+    cells = _coarse_cells(spark, emb)
     base = _write_corpus_tiles(spark, emb, sf_dir, n_tiles=1)
-    corpus = emb.mapInPandas(
-        lambda it: assign(it, 1, "nbr_id"), "nbr_id bigint, cell bigint"
-    )
-    queries_side = emb.mapInPandas(
-        lambda it: assign(it, N_PROBE, "src_id"), "src_id bigint, cell bigint"
-    )
     candidates = (
-        queries_side.join(corpus, "cell")
+        cells(N_PROBE, "src_id")
+        .join(cells(1, "nbr_id"), "cell")
         .filter(F.col("src_id") != F.col("nbr_id"))
         .select("src_id", "nbr_id")
         .distinct()
@@ -1257,18 +1264,7 @@ def llm_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_embeddings(spark, sf_dir).select("vec_id", "embedding")
 
-    # ---- coarse quantizer (identical shape to llm_ivf_ann_topk) ----
-    seeded = emb.withColumn("cell", F.pmod(F.xxhash64("vec_id"), F.lit(N_CELLS)))
-    cent = np.zeros((N_CELLS, EMBED_DIM))
-    for r in (
-        seeded.select("cell", F.posexplode("embedding").alias("dim", "v"))
-        .groupBy("cell", "dim")
-        .agg(F.avg(F.col("v").cast("double")).alias("c"))
-        .collect()
-    ):
-        cent[r.cell, r.dim] = r.c
-    cent_norm = np.sqrt((cent * cent).sum(axis=1))
-    cent_norm[cent_norm == 0.0] = 1.0
+    cells = _coarse_cells(spark, emb)
 
     # ---- PQ codebooks: Lloyd k-means per subspace on a BOUNDED sample ----
     # (the standard offline PQ training path — shared with the escalated
@@ -1284,33 +1280,12 @@ def llm_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "src_id bigint, nbr_id bigint, cos_sim double"
         )
-    bc = spark.sparkContext.broadcast((cent, cent_norm, books))
-
-    def assign_cells(batches, n_out: int, out: str):
-        c, cn, _ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame({out: [], "cell": []}).astype(
-                    {out: "int64", "cell": "int64"}
-                )
-                continue
-            q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            qn = np.sqrt((q * q).sum(axis=1))
-            qn[qn == 0.0] = 1.0
-            sim = q @ c.T / (qn[:, None] * cn[None, :])
-            cells = np.argsort(-sim, axis=1, kind="stable")[:, :n_out]
-            yield pd.DataFrame(
-                {
-                    out: pdf["vec_id"].to_numpy().repeat(n_out),
-                    "cell": cells.reshape(-1),
-                }
-            )
+    bc = spark.sparkContext.broadcast(books)
 
     def encode_codes(batches):
-        # corpus vec → 8 int codes (nearest PQ centroid per subspace,
+        # corpus vec → PQ_M int codes (nearest PQ centroid per subspace,
         # L2-normalized first). Emits (nbr_id, codes) only.
-        _, _, bk = bc.value
-        d_sub = EMBED_DIM // PQ_M
+        bk = bc.value
         for pdf in batches:
             if not len(pdf):
                 yield pd.DataFrame({"nbr_id": [], "codes": []}).astype(
@@ -1320,26 +1295,15 @@ def llm_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             v = np.array(list(pdf["embedding"]), dtype=np.float64)
             n = np.sqrt((v * v).sum(axis=1, keepdims=True))
             n[n == 0.0] = 1.0
-            v = v / n
-            codes = np.empty((len(v), PQ_M), dtype=np.int64)
-            for m in range(PQ_M):
-                sub = v[:, m * d_sub : (m + 1) * d_sub]
-                # (n, K) squared L2 to each centroid of this subspace
-                d2 = ((sub[:, None, :] - bk[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = np.argmin(d2, axis=1)
+            codes = _encode_mat(v / n, bk)
             yield pd.DataFrame({"nbr_id": pdf["vec_id"], "codes": list(codes)})
 
     base = _write_corpus_tiles(spark, emb, sf_dir, n_tiles=1)
     tile_path = f"{base}/tile=0"
-    corpus_cells = emb.mapInPandas(
-        lambda it: assign_cells(it, 1, "nbr_id"), "nbr_id bigint, cell bigint"
-    )
-    query_cells = emb.mapInPandas(
-        lambda it: assign_cells(it, N_PROBE, "src_id"), "src_id bigint, cell bigint"
-    )
     codes_df = emb.mapInPandas(encode_codes, "nbr_id bigint, codes array<bigint>")
     candidates = (
-        query_cells.join(corpus_cells, "cell")
+        cells(N_PROBE, "src_id")
+        .join(cells(1, "nbr_id"), "cell")
         .filter(F.col("src_id") != F.col("nbr_id"))
         .select("src_id", "nbr_id")
         .distinct()
@@ -1350,8 +1314,7 @@ def llm_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # asymmetric distance: per unique query in the batch build the
         # (M, K) LUT q_sub · codebook once, then every candidate's score
         # is an 8-element gather-sum — no corpus vector is read here.
-        _, _, bk = bc.value
-        d_sub = EMBED_DIM // PQ_M
+        bk = bc.value
         ids, mat, norms = _load_tile(tile_path)
         for pdf in batches:
             if not len(pdf):

@@ -30,6 +30,14 @@ from ..sources.tables import (
     input_bytes,
     load_table,
 )
+from ..operators.ivf import (
+    IVF_ORACLE_CTES,
+    IVF_SPLIT_TOP,
+    _ivf_assign_cells,
+    _ivf_frozen_seeds,
+    _ivf_int_vectors,
+    micro_units,
+)
 from .replay import drain, ntile_chunks, replay_dir, run_available_now
 
 EMBED_DIM = 64
@@ -1185,51 +1193,28 @@ def str_embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_monitor_oracle() -> str:
-    from ..operators.ivf import IVF_REFRESH_CELLS
-
-    return f"""
-    WITH ei AS (
-        SELECT vec_id, vec_id % {N_DOC_CHUNKS} AS chunk,
-               list_transform(embedding::DOUBLE[],
-                   x -> CAST(floor(x * 1000000) AS BIGINT)) AS a
-        FROM embeddings WHERE embedding IS NOT NULL
-    ), seeds AS (
-        SELECT vec_id AS cell_id, a AS b,
-               list_sum(list_transform(a, x -> x * x))::HUGEINT AS nn
-        FROM ei WHERE vec_id % 2 = 0
-        ORDER BY md5('ivfr:' || vec_id), vec_id
-        LIMIT {IVF_REFRESH_CELLS}
-    ), assigned AS (
-        SELECT vec_id, chunk, cell_id
-        FROM (
-            SELECT ei.vec_id, ei.chunk, s.cell_id,
-                   CASE WHEN d.dot >= 0 THEN (d.dot * d.dot) // s.nn
-                        ELSE -((d.dot * d.dot) // s.nn) END AS score
-            FROM ei CROSS JOIN seeds s
-            CROSS JOIN LATERAL (SELECT list_sum(list_transform(
-                range(1, len(ei.a) + 1), i -> ei.a[i] * s.b[i]))::HUGEINT
-                AS dot) d
-        )
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY vec_id ORDER BY score DESC, cell_id) = 1
+_IVF_MONITOR_ORACLE = (
+    IVF_ORACLE_CTES
+    + f""", chunked AS (
+        SELECT vec_id % {N_DOC_CHUNKS} AS chunk, cell_id FROM assigned
     ), bt AS (
-        SELECT chunk, COUNT(*) AS batch_total FROM assigned GROUP BY chunk
+        SELECT chunk, COUNT(*) AS batch_total FROM chunked GROUP BY chunk
     )
     SELECT CAST(a.chunk AS BIGINT)   AS chunk,
            a.cell_id,
            CAST(COUNT(*) AS BIGINT)  AS n_assigned,
            CAST(COUNT(*) * 1000000 // bt.batch_total
                 AS BIGINT)           AS share_micro
-    FROM assigned a JOIN bt USING (chunk)
+    FROM chunked a JOIN bt USING (chunk)
     GROUP BY a.chunk, a.cell_id, bt.batch_total
 """
+)
 
 
 @query(
     "str_ivf_ingest_monitor",
     survey_id="STR-8/LLM-5/ETL-6",
-    oracle=_ivf_monitor_oracle(),
+    oracle=_IVF_MONITOR_ORACLE,
 )
 def str_ivf_ingest_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming IVF ingest monitor: every arriving micro-batch of
@@ -1252,29 +1237,20 @@ def str_ivf_ingest_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent by semantics; chunk=<batch_id> per-partition overwrite
     idempotency. All-integer assignment and exact floor shares —
     bit-comparable to the brute-force oracle."""
-    from ..operators.ivf import (
-        _ivf_assign_cells,
-        _ivf_frozen_seeds,
-        _ivf_int_vectors,
-    )
-
     replay = _emb_drift_replay_dir(spark, sf_dir)
     root = store_path(spark, "scratch", sf_dir, "str_ivf_ingest_monitor")
     remove(spark, root)
     results_store = f"{root}/report"
 
-    seeds = _ivf_frozen_seeds(spark, _ivf_int_vectors(spark, sf_dir))
+    _, seed_rows = _ivf_frozen_seeds(spark, _ivf_int_vectors(spark, sf_dir))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         ei = batch_df.select(
             "vec_id",
             F.lit(0).alias("snap"),  # unused by the assigner's output here
-            F.expr(
-                "transform(cast(embedding as array<double>),"
-                " x -> cast(floor(x * 1000000) as bigint))"
-            ).alias("a"),
+            micro_units().alias("a"),
         )
-        assigned = _ivf_assign_cells(ei, seeds).select("vec_id", "cell_id")
+        assigned = _ivf_assign_cells(ei, seed_rows).select("vec_id", "cell_id")
         counts = assigned.groupBy("cell_id").agg(
             F.count(F.lit(1)).alias("n_assigned")
         )
@@ -1305,35 +1281,9 @@ def str_ivf_ingest_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_append_oracle() -> str:
-    from ..operators.ivf import IVF_REFRESH_CELLS
-
-    return f"""
-    WITH ei AS (
-        SELECT vec_id, vec_id % 2 AS snap,
-               list_transform(embedding::DOUBLE[],
-                   x -> CAST(floor(x * 1000000) AS BIGINT)) AS a
-        FROM embeddings WHERE embedding IS NOT NULL
-    ), seeds AS (
-        SELECT vec_id AS cell_id, a AS b,
-               list_sum(list_transform(a, x -> x * x))::HUGEINT AS nn
-        FROM ei WHERE snap = 0
-        ORDER BY md5('ivfr:' || vec_id), vec_id
-        LIMIT {IVF_REFRESH_CELLS}
-    ), assigned AS (
-        SELECT vec_id, snap, cell_id
-        FROM (
-            SELECT ei.vec_id, ei.snap, s.cell_id,
-                   CASE WHEN d.dot >= 0 THEN (d.dot * d.dot) // s.nn
-                        ELSE -((d.dot * d.dot) // s.nn) END AS score
-            FROM ei CROSS JOIN seeds s
-            CROSS JOIN LATERAL (SELECT list_sum(list_transform(
-                range(1, len(ei.a) + 1), i -> ei.a[i] * s.b[i]))::HUGEINT
-                AS dot) d
-        )
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY vec_id ORDER BY score DESC, cell_id) = 1
-    )
+_IVF_APPEND_ORACLE = (
+    IVF_ORACLE_CTES
+    + f"""
     SELECT cell_id,
            CAST(SUM(CASE WHEN snap = 0 THEN 1 ELSE 0 END) AS BIGINT)
                AS n_old,
@@ -1345,15 +1295,16 @@ def _ivf_append_oracle() -> str:
                 AS BIGINT) AS n_chunks
     FROM assigned GROUP BY cell_id
 """
+)
 
 
 @query(
     "str_ivf_index_append",
     survey_id="STR-8/LLM-5/ETL-5",
-    oracle=_ivf_append_oracle(),
+    oracle=_IVF_APPEND_ORACLE,
 )
 def str_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming IVF index APPEND (VERDICT r10 #2): the arriving batches
+    """Streaming IVF index APPEND: the arriving batches
     are not just routed and reported (str_ivf_ingest_monitor) — each
     micro-batch's (vec_id, cell_id) assignments are PERSISTED into an
     accumulating index store alongside the batch-built base index, so
@@ -1381,12 +1332,6 @@ def str_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the store is the standard IVF posting layout: partitioned by
     arrival chunk, 16 bytes/vector, mergeable offline into cell-major
     order without recomputing a single assignment."""
-    from ..operators.ivf import (
-        _ivf_assign_cells,
-        _ivf_frozen_seeds,
-        _ivf_int_vectors,
-    )
-
     replay = _emb_drift_replay_dir(spark, sf_dir)
     root = store_path(spark, "scratch", sf_dir, "str_ivf_index_append")
     remove(spark, root)
@@ -1394,12 +1339,12 @@ def str_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     append_store = f"{root}/chunks"
 
     ei_static = _ivf_int_vectors(spark, sf_dir)
-    seeds = _ivf_frozen_seeds(spark, ei_static)
+    _, seed_rows = _ivf_frozen_seeds(spark, ei_static)
 
     # the base index: even-half assignments, written before the stream
     # opens (the refresh's build step, store-local to this query so the
     # restart test can wipe and rebuild freely)
-    _ivf_assign_cells(ei_static.filter(F.col("snap") == 0), seeds).select(
+    _ivf_assign_cells(ei_static.filter(F.col("snap") == 0), seed_rows).select(
         "vec_id", "cell_id"
     ).coalesce(1).write.mode("overwrite").parquet(base_store)
 
@@ -1407,12 +1352,9 @@ def str_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         arriving = batch_df.filter(F.pmod("vec_id", F.lit(2)) == 1).select(
             "vec_id",
             F.lit(1).alias("snap"),
-            F.expr(
-                "transform(cast(embedding as array<float>),"
-                " x -> cast(floor(x * 1000000) as bigint))"
-            ).alias("a"),
+            micro_units().alias("a"),
         )
-        _ivf_assign_cells(arriving, seeds).select(
+        _ivf_assign_cells(arriving, seed_rows).select(
             "vec_id", "cell_id"
         ).coalesce(1).write.mode("overwrite").parquet(
             f"{append_store}/chunk={batch_id}"
@@ -1464,36 +1406,10 @@ def str_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_rebalance_trigger_oracle() -> str:
-    from ..operators.ivf import IVF_REFRESH_CELLS, IVF_SPLIT_TOP
-
-    return f"""
-    WITH ei AS (
-        SELECT vec_id, vec_id % {N_DOC_CHUNKS} AS chunk,
-               list_transform(embedding::DOUBLE[],
-                   x -> CAST(floor(x * 1000000) AS BIGINT)) AS a
-        FROM embeddings WHERE embedding IS NOT NULL
-    ), seeds AS (
-        SELECT vec_id AS cell_id, a AS b,
-               list_sum(list_transform(a, x -> x * x))::HUGEINT AS nn
-        FROM ei WHERE vec_id % 2 = 0
-        ORDER BY md5('ivfr:' || vec_id), vec_id
-        LIMIT {IVF_REFRESH_CELLS}
-    ), assigned AS (
-        SELECT vec_id, chunk, cell_id
-        FROM (
-            SELECT ei.vec_id, ei.chunk, s.cell_id,
-                   CASE WHEN d.dot >= 0 THEN (d.dot * d.dot) // s.nn
-                        ELSE -((d.dot * d.dot) // s.nn) END AS score
-            FROM ei CROSS JOIN seeds s
-            CROSS JOIN LATERAL (SELECT list_sum(list_transform(
-                range(1, len(ei.a) + 1), i -> ei.a[i] * s.b[i]))::HUGEINT
-                AS dot) d
-        )
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY vec_id ORDER BY score DESC, cell_id) = 1
-    ), counts AS (
-        SELECT chunk, cell_id, COUNT(*) AS n
+_IVF_REBALANCE_TRIGGER_ORACLE = (
+    IVF_ORACLE_CTES
+    + f""", counts AS (
+        SELECT vec_id % {N_DOC_CHUNKS} AS chunk, cell_id, COUNT(*) AS n
         FROM assigned GROUP BY chunk, cell_id
     ), grid AS (
         SELECT c.chunk, s.cell_id
@@ -1520,12 +1436,13 @@ def _ivf_rebalance_trigger_oracle() -> str:
                AS split_candidate
     FROM cum WHERE cum_n > 0
 """
+)
 
 
 @query(
     "str_ivf_rebalance_trigger",
     survey_id="STR-8/LLM-5/ETL-6",
-    oracle=_ivf_rebalance_trigger_oracle(),
+    oracle=_IVF_REBALANCE_TRIGGER_ORACLE,
 )
 def str_ivf_rebalance_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming REBALANCE TRIGGER — the decision leg between
@@ -1552,31 +1469,21 @@ def str_ivf_rebalance_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     |cells|-row count frame lands in the store per trigger. The
     cumulative re-rank runs over the ≤ |chunks|x|cells| store rows — a
     plan-constant frame, never corpus-sized, at any SF."""
-    from ..operators.ivf import (
-        IVF_SPLIT_TOP,
-        _ivf_assign_cells,
-        _ivf_frozen_seeds,
-        _ivf_int_vectors,
-    )
-
     replay = _emb_drift_replay_dir(spark, sf_dir)
     root = store_path(spark, "scratch", sf_dir, "str_ivf_rebalance_trigger")
     remove(spark, root)
     results_store = f"{root}/report"
 
-    seeds = _ivf_frozen_seeds(spark, _ivf_int_vectors(spark, sf_dir))
+    _, seed_rows = _ivf_frozen_seeds(spark, _ivf_int_vectors(spark, sf_dir))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         ei = batch_df.select(
             "vec_id",
             F.lit(0).alias("snap"),
-            F.expr(
-                "transform(cast(embedding as array<float>),"
-                " x -> cast(floor(x * 1000000) as bigint))"
-            ).alias("a"),
+            micro_units().alias("a"),
         )
         (
-            _ivf_assign_cells(ei, seeds)
+            _ivf_assign_cells(ei, seed_rows)
             .groupBy("cell_id")
             .agg(F.count(F.lit(1)).alias("n"))
             .coalesce(1)
@@ -1638,36 +1545,9 @@ def str_ivf_rebalance_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_compact_oracle() -> str:
-    from ..operators.ivf import IVF_REFRESH_CELLS
-
-    return f"""
-    WITH ei AS (
-        SELECT vec_id, vec_id % 2 AS snap,
-               list_transform(embedding::DOUBLE[],
-                   x -> CAST(floor(x * 1000000) AS BIGINT)) AS a
-        FROM embeddings WHERE embedding IS NOT NULL
-    ), seeds AS (
-        SELECT vec_id AS cell_id, a AS b,
-               list_sum(list_transform(a, x -> x * x))::HUGEINT AS nn
-        FROM ei WHERE snap = 0
-        ORDER BY md5('ivfr:' || vec_id), vec_id
-        LIMIT {IVF_REFRESH_CELLS}
-    ), assigned AS (
-        SELECT vec_id, cell_id
-        FROM (
-            SELECT ei.vec_id, s.cell_id,
-                   CASE WHEN d.dot >= 0 THEN (d.dot * d.dot) // s.nn
-                        ELSE -((d.dot * d.dot) // s.nn) END AS score
-            FROM ei CROSS JOIN seeds s
-            CROSS JOIN LATERAL (SELECT list_sum(list_transform(
-                range(1, len(ei.a) + 1), i -> ei.a[i] * s.b[i]))::HUGEINT
-                AS dot) d
-            WHERE ei.snap = 1
-        )
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY vec_id ORDER BY score DESC, cell_id) = 1
-    )
+_IVF_COMPACT_ORACLE = (
+    IVF_ORACLE_CTES
+    + f"""
     SELECT cell_id,
            CAST(COUNT(*) AS BIGINT) AS n_before,
            CAST(COUNT(DISTINCT vec_id % {N_DOC_CHUNKS}) AS BIGINT)
@@ -1676,17 +1556,18 @@ def _ivf_compact_oracle() -> str:
            CAST(1 AS BIGINT) AS n_files,
            CAST(MIN(vec_id) AS BIGINT) AS min_vec_id,
            CAST(MAX(vec_id) AS BIGINT) AS max_vec_id
-    FROM assigned GROUP BY cell_id
+    FROM assigned WHERE snap = 1 GROUP BY cell_id
 """
+)
 
 
 @query(
     "llm_ivf_store_compact",
     survey_id="ETL-5/LLM-5/STR-8",
-    oracle=_ivf_compact_oracle(),
+    oracle=_IVF_COMPACT_ORACLE,
 )
 def llm_ivf_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-store COMPACTION (VERDICT r11 #2): makes the append store's
+    """Index-store COMPACTION: makes the append store's
     "mergeable offline into cell-major order without recomputing a
     single assignment" claim (str_ivf_index_append docstring) a graded
     operator instead of prose. The chunk-partitioned write-ahead store
@@ -1717,26 +1598,20 @@ def llm_ivf_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nightly posting-merge every IVF serving tier runs; the
     file-per-cell invariant is what keeps probe-side open() counts at
     O(nprobe), not O(chunks)."""
-    from ..operators.ivf import (
-        _ivf_assign_cells,
-        _ivf_frozen_seeds,
-        _ivf_int_vectors,
-    )
-
     root = store_path(spark, "scratch", sf_dir, "llm_ivf_store_compact")
     remove(spark, root)
     src_store = f"{root}/src"
     dst_store = f"{root}/dst"
 
     ei = _ivf_int_vectors(spark, sf_dir)
-    seeds = _ivf_frozen_seeds(spark, ei)
+    _, seed_rows = _ivf_frozen_seeds(spark, ei)
     # The chunk-partitioned source: the streamed half's assignments in
     # the append store's write-ahead layout (chunk = arrival batch =
     # vec_id % N_DOC_CHUNKS — the replay's pure-function chunking), one
     # file per chunk partition, built batch-side so the graded query is
     # store-deterministic; stream parity is the restart test's job.
     (
-        _ivf_assign_cells(ei.filter(F.col("snap") == 1), seeds)
+        _ivf_assign_cells(ei.filter(F.col("snap") == 1), seed_rows)
         .withColumn(
             "chunk", F.pmod("vec_id", F.lit(N_DOC_CHUNKS)).cast("int")
         )
@@ -1816,35 +1691,9 @@ def llm_ivf_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_DELETE_HEX_BOUND = "2"
 
 
-def _ivf_delete_oracle() -> str:
-    from ..operators.ivf import IVF_REFRESH_CELLS
-
-    return f"""
-    WITH ei AS (
-        SELECT vec_id, vec_id % 2 AS snap,
-               list_transform(embedding::DOUBLE[],
-                   x -> CAST(floor(x * 1000000) AS BIGINT)) AS a
-        FROM embeddings WHERE embedding IS NOT NULL
-    ), seeds AS (
-        SELECT vec_id AS cell_id, a AS b,
-               list_sum(list_transform(a, x -> x * x))::HUGEINT AS nn
-        FROM ei WHERE snap = 0
-        ORDER BY md5('ivfr:' || vec_id), vec_id
-        LIMIT {IVF_REFRESH_CELLS}
-    ), assigned AS (
-        SELECT vec_id, cell_id
-        FROM (
-            SELECT ei.vec_id, s.cell_id,
-                   CASE WHEN d.dot >= 0 THEN (d.dot * d.dot) // s.nn
-                        ELSE -((d.dot * d.dot) // s.nn) END AS score
-            FROM ei CROSS JOIN seeds s
-            CROSS JOIN LATERAL (SELECT list_sum(list_transform(
-                range(1, len(ei.a) + 1), i -> ei.a[i] * s.b[i]))::HUGEINT
-                AS dot) d
-        )
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY vec_id ORDER BY score DESC, cell_id) = 1
-    ), tomb AS (
+_IVF_DELETE_ORACLE = (
+    IVF_ORACLE_CTES
+    + f""", tomb AS (
         SELECT vec_id FROM ei
         WHERE substr(md5('ivfd:' || vec_id), 1, 1)
               < '{IVF_DELETE_HEX_BOUND}'
@@ -1860,17 +1709,17 @@ def _ivf_delete_oracle() -> str:
     FROM assigned a LEFT JOIN tomb t ON t.vec_id = a.vec_id
     GROUP BY a.cell_id
 """
+)
 
 
 @query(
     "str_ivf_index_delete",
     survey_id="STR-8/LLM-5/ETL-5",
-    oracle=_ivf_delete_oracle(),
+    oracle=_IVF_DELETE_ORACLE,
 )
 def str_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tombstone/DELETE leg for the incremental IVF store (VERDICT r11
-    #3) — the missing third verb of corpus curation: takedowns,
-    recrawl-supersedes, and right-to-be-forgotten requests REMOVE
+    """Tombstone/DELETE leg for the incremental IVF store — the missing
+    third verb of corpus curation: takedowns, recrawl-supersedes, and right-to-be-forgotten requests REMOVE
     vectors from a serving index that only ever learned to append. Each
     replayed micro-batch now writes two write-ahead frames: its odd-half
     assignments into the accumulating append store (the
@@ -1895,12 +1744,6 @@ def str_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_ivf_store_compact shuffle with the anti-join fused before the
     exchange — deleted rows never travel. Between compactions, serving
     pays one anti-join; after, nothing."""
-    from ..operators.ivf import (
-        _ivf_assign_cells,
-        _ivf_frozen_seeds,
-        _ivf_int_vectors,
-    )
-
     replay = _emb_drift_replay_dir(spark, sf_dir)
     root = store_path(spark, "scratch", sf_dir, "str_ivf_index_delete")
     remove(spark, root)
@@ -1910,8 +1753,8 @@ def str_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     live_store = f"{root}/compacted"
 
     ei_static = _ivf_int_vectors(spark, sf_dir)
-    seeds = _ivf_frozen_seeds(spark, ei_static)
-    _ivf_assign_cells(ei_static.filter(F.col("snap") == 0), seeds).select(
+    _, seed_rows = _ivf_frozen_seeds(spark, ei_static)
+    _ivf_assign_cells(ei_static.filter(F.col("snap") == 0), seed_rows).select(
         "vec_id", "cell_id"
     ).coalesce(1).write.mode("overwrite").parquet(base_store)
 
@@ -1928,12 +1771,9 @@ def str_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         arriving = batch_df.filter(F.pmod("vec_id", F.lit(2)) == 1).select(
             "vec_id",
             F.lit(1).alias("snap"),
-            F.expr(
-                "transform(cast(embedding as array<float>),"
-                " x -> cast(floor(x * 1000000) as bigint))"
-            ).alias("a"),
+            micro_units().alias("a"),
         )
-        _ivf_assign_cells(arriving, seeds).select(
+        _ivf_assign_cells(arriving, seed_rows).select(
             "vec_id", "cell_id"
         ).coalesce(1).write.mode("overwrite").parquet(
             f"{append_store}/chunk={batch_id}"

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from sealnet_etl_spark.registry import all_queries
 
 from .conftest import SF_DIR
+from .ivf_reference import ivf_assign_cells_catalyst
 
 
 @pytest.fixture(scope="module")
@@ -30,13 +31,12 @@ def test_ivf_assign_kernel_matches_catalyst(spark):
     exceptAll (the minhash_signatures_arrow precedent)."""
     from sealnet_etl_spark.operators.ivf import (
         _ivf_assign_cells,
-        _ivf_assign_cells_catalyst,
         _ivf_frozen_seeds,
         _ivf_int_vectors,
     )
 
     ei = _ivf_int_vectors(spark, SF_DIR)
-    seeds = _ivf_frozen_seeds(spark, ei)
+    seeds, seed_rows = _ivf_frozen_seeds(spark, ei)
     # edge input: a null vector, a null element and a wrong-width vector
     # fold to a null dot for every cell in the Catalyst form, whose
     # max_by then picks the smallest cell_id; the kernel's fallback
@@ -47,8 +47,8 @@ def test_ivf_assign_kernel_matches_catalyst(spark):
     )
     for df in (ei, edge):
         for keep_vec in (False, True):
-            new = _ivf_assign_cells(df, seeds, keep_vec=keep_vec)
-            old = _ivf_assign_cells_catalyst(df, seeds, keep_vec=keep_vec)
+            new = _ivf_assign_cells(df, seed_rows, keep_vec=keep_vec)
+            old = ivf_assign_cells_catalyst(df, seeds, keep_vec=keep_vec)
             if keep_vec:
                 new = new.select("vec_id", "snap", "cell_id", "a")
             assert new.exceptAll(old).count() == 0, keep_vec
@@ -65,8 +65,10 @@ def test_ivf_assign_kernel_cc_is_exact_sq_norm(spark):
     )
 
     ei = _ivf_int_vectors(spark, SF_DIR)
-    seeds = _ivf_frozen_seeds(spark, ei)
-    got = _ivf_assign_cells(ei, seeds, keep_vec=True).select("vec_id", "cc")
+    _, seed_rows = _ivf_frozen_seeds(spark, ei)
+    got = _ivf_assign_cells(ei, seed_rows, keep_vec=True).select(
+        "vec_id", "cc"
+    )
     ref = ei.select(
         "vec_id",
         F.expr(
@@ -83,26 +85,31 @@ def test_ivf_assign_kernel_exact_tie_breaks_to_smallest_cell(spark):
     identical dot and nn for every input) so the kernel's ambiguity
     band + exact Python-int re-decide path is exercised, and assert the
     max_by tie rule: smallest cell_id wins. Cross-checked against the
-    Catalyst reference on the same inputs."""
-    from sealnet_etl_spark.operators.ivf import (
-        _ivf_assign_cells,
-        _ivf_assign_cells_catalyst,
-    )
+    Catalyst reference on the same inputs. Building the assignment over
+    the given seed rows starts no Spark job."""
+    from sealnet_etl_spark.operators.ivf import _ivf_assign_cells
     from sealnet_etl_spark.operators.similarity import EMBED_DIM
 
     vec_a = [7] * EMBED_DIM
     vec_b = [(-3) ** (i % 2) for i in range(EMBED_DIM)]  # mixed signs
     nn = Decimal(sum(x * x for x in vec_a))
+    seed_rows = [
+        (11, vec_a, nn),
+        (5, vec_a, nn),
+        (42, vec_b, Decimal(sum(x * x for x in vec_b))),
+    ]
     seeds = spark.createDataFrame(
-        [(11, vec_a, nn), (5, vec_a, nn), (42, vec_b, Decimal(sum(x * x for x in vec_b)))],
-        "cell_id bigint, b array<bigint>, nn decimal(38,0)",
+        seed_rows, "cell_id bigint, b array<bigint>, nn decimal(38,0)"
     )
     df = spark.createDataFrame(
         [(1, 0, [7] * EMBED_DIM), (2, 1, [1000000] * EMBED_DIM), (3, 0, vec_b)],
         "vec_id bigint, snap int, a array<bigint>",
     )
-    new = _ivf_assign_cells(df, seeds)
-    old = _ivf_assign_cells_catalyst(df, seeds)
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup())
+    new = _ivf_assign_cells(df, seed_rows)
+    assert set(tracker.getJobIdsForGroup()) == jobs_before
+    old = ivf_assign_cells_catalyst(df, seeds)
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
     got = {r["vec_id"]: r["cell_id"] for r in new.collect()}

@@ -329,6 +329,7 @@ def test_accumulated_serve_matches_store(spark):
     are first-class serving candidates and the store holds exactly
     what the serve assumes."""
     from sealnet_etl_spark.operators.ivf import (
+        _int_sq_norm,
         _ivf_frozen_seeds,
         _ivf_int_vectors,
         _ivf_serve_topk,
@@ -349,13 +350,22 @@ def test_accumulated_serve_matches_store(spark):
     appended = spark.read.parquet(
         _written(spark, "str_ivf_index_append", "chunks")
     ).select("vec_id", F.lit(1).cast("bigint").alias("snap"), "cell_id")
-    store_assign = base.unionByName(appended)
-
     ei = _ivf_int_vectors(spark, SF_DIR)
-    seeds = _ivf_frozen_seeds(spark, ei)
+    store_members = (
+        base.unionByName(appended)
+        .join(ei.select("vec_id", "a"), "vec_id")
+        .select(
+            F.col("vec_id").alias("nbr_id"),
+            "cell_id",
+            F.col("a").alias("c"),
+            _int_sq_norm("a").alias("cc"),
+            F.col("snap").alias("from_stream"),
+        )
+    )
+    seeds, _ = _ivf_frozen_seeds(spark, ei)
     from_store = sorted(
         tuple(r)
-        for r in _ivf_serve_topk(ei, seeds, store_assign).collect()
+        for r in _ivf_serve_topk(ei, seeds, store_members).collect()
     )
     assert from_store == registered
     # and the streamed leg actually serves: some neighbor is odd-half

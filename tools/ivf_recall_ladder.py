@@ -1,19 +1,19 @@
 #!/usr/bin/env python
-"""IVF recall@k-vs-nprobe ladder (VERDICT r10 #1): measure, don't
-claim. For each nprobe in the sweep, run the parameterized probe
-(_ivf_probe_frame — the exact plan llm_ivf_cell_probe_nprobe serves
-with) and score its per-query top-k against the EXACT brute-force
-top-k over the full indexed (even) half, computed with the identical
-sign(dot)·(dot² div cc) integer order and nbr_id tie-break — so the
-only difference between "exact" and "probe" is the cell restriction,
-which is precisely what recall@k measures.
+"""IVF recall@k-vs-nprobe ladder: measure, don't claim. For each
+nprobe in the sweep, run the parameterized probe (_ivf_probe_frame —
+the exact plan llm_ivf_cell_probe_nprobe serves with) and score its
+per-query top-k against the EXACT brute-force top-k over the full
+indexed (even) half, computed with the identical sign(dot)·(dot² div
+cc) integer order and nbr_id tie-break — so the only difference
+between "exact" and "probe" is the cell restriction, which is
+precisely what recall@k measures.
 
 Usage:
     python tools/ivf_recall_ladder.py [sf_dir ...] [--nprobes 1,2,4,8,16]
 
 Prints one line per (sf_dir, nprobe): recall@k averaged over the
 IVF_PROBE_Q queries, plus probe wall seconds. Results table lives in
-SCALE.md (round 11)."""
+SCALE.md."""
 
 from __future__ import annotations
 
@@ -27,48 +27,29 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 def exact_topk(spark, sf_dir: str, k: int):
     """Brute-force per-query top-k over the whole even half — the
-    recall denominator. Same integer ranking as the probe."""
+    recall denominator. Same query batch and integer ranking as the
+    probe."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from sealnet_etl_spark.operators.ivf import IVF_PROBE_Q, _ivf_int_vectors
+    from sealnet_etl_spark.operators.ivf import (
+        _int_dot,
+        _int_sq_norm,
+        _ivf_int_vectors,
+        _ivf_queries,
+        _rank_score_expr,
+    )
 
     ei = _ivf_int_vectors(spark, sf_dir)
     members = ei.filter(F.col("snap") == 0).select(
         F.col("vec_id").alias("nbr_id"),
         F.col("a").alias("c"),
-        F.expr(
-            "aggregate(transform(a, x -> x * x),"
-            " cast(0 as decimal(38,0)), (acc, v) -> acc + v)"
-        ).alias("cc"),
-    )
-    queries = (
-        ei.filter(F.col("snap") == 1)
-        .select(F.col("vec_id").alias("query_id"), F.col("a").alias("q"))
-        .orderBy(
-            F.md5(F.concat(F.lit("ivfp:"), F.col("query_id").cast("string"))),
-            "query_id",
-        )
-        .limit(IVF_PROBE_Q)
+        _int_sq_norm("a").alias("cc"),
     )
     scored = (
-        members.crossJoin(F.broadcast(queries))
-        .select(
-            "query_id",
-            "nbr_id",
-            "cc",
-            F.expr(
-                "aggregate(zip_with(q, c, (x, y) -> x * y),"
-                " cast(0 as decimal(38,0)), (acc, v) -> acc + v)"
-            ).alias("dot"),
-        )
-        .withColumn(
-            "rank_score",
-            F.expr(
-                "cast(case when dot >= 0 then (dot * dot) div cc"
-                " else -((dot * dot) div cc) end as bigint)"
-            ),
-        )
+        members.crossJoin(F.broadcast(_ivf_queries(ei)))
+        .select("query_id", "nbr_id", "cc", _int_dot("q", "c").alias("dot"))
+        .withColumn("rank_score", _rank_score_expr())
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("rank_score"), "nbr_id")
     rows = (
