@@ -1719,8 +1719,9 @@ _IVF_DELETE_ORACLE = (
 )
 def str_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tombstone/DELETE leg for the incremental IVF store — the missing
-    third verb of corpus curation: takedowns, recrawl-supersedes, and right-to-be-forgotten requests REMOVE
-    vectors from a serving index that only ever learned to append. Each
+    third verb of corpus curation: takedowns, recrawl-supersedes, and
+    right-to-be-forgotten requests REMOVE vectors from a serving index
+    that only ever learned to append. Each
     replayed micro-batch now writes two write-ahead frames: its odd-half
     assignments into the accumulating append store (the
     str_ivf_index_append contract, unchanged) and its TOMBSTONES — the
